@@ -52,8 +52,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # builds its own) never sees another session's plans; keyed by sf_dir so
 # distinct fixtures never collide. Testdata dirs are immutable within a
 # process (driver contract), which is what makes the memo sound; hostile /
-# scratch fixtures get unique paths per build. SPARK_GRAFT_TABLE_MEMO=0
-# disables it (A/B harness + any future mutable-dir caller).
+# scratch fixtures get unique paths per build.
 _TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
@@ -89,12 +88,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     exact because the session pins ``timeZone=UTC``.
     """
     ensure_runtime_confs(spark)
-    memo = None
-    if os.environ.get("SPARK_GRAFT_TABLE_MEMO", "1") != "0":
-        memo = _TABLE_MEMO.setdefault(spark, {})
-        cached = memo.get((sf_dir, name))
-        if cached is not None:
-            return cached
+    memo = _TABLE_MEMO.setdefault(spark, {})
+    cached = memo.get((sf_dir, name))
+    if cached is not None:
+        return cached
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         if events_ts_is_long(df):
@@ -104,8 +101,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         else:
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    if memo is not None:
-        memo[(sf_dir, name)] = df
+    memo[(sf_dir, name)] = df
     return df
 
 

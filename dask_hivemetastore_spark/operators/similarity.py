@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import json
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -2066,18 +2065,14 @@ def ivf_train_centroids(emb: DataFrame, n_cells: int = 16, seed: int = 42,
     # rows of one vector column) so persisting it is safe at any corpus
     # size; same rows/partitions/order → centroids are bit-identical
     # (verified against the oracle-pinned recall keys).
-    # SPARK_GRAFT_TRAIN_PERSIST=0 disables (A/B harness).
-    persisted = None
-    if os.environ.get("SPARK_GRAFT_TRAIN_PERSIST", "1") != "0":
-        persisted = train = train.persist()
+    train = train.persist()
     try:
         # coarse quantizers don't need convergence (FAISS trains IVF with
         # ~10 iters); 8 halves the fit cost vs 20 with recall unchanged
         # on the fixture (test_ivf_topk_recall)
         model = KMeans(k=n_cells, seed=seed, maxIter=8).fit(train)
     finally:
-        if persisted is not None:
-            persisted.unpersist()
+        train.unpersist()
     C = np.stack([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
     norms = np.linalg.norm(C, axis=1, keepdims=True)
     C = C / np.clip(norms, 1e-12, None)
@@ -3956,6 +3951,12 @@ def ann_index_rebuild(spark, index_path: str, corpus=None, *,
             corpus = resident.select(
                 *[c for c in resident.columns if c not in model_cols]
             )
+        if kind != "lsh":
+            # KMeans' seeded init samples partition by partition, and the
+            # index's file order changes from run to run: lay the corpus
+            # out by its ids and its size alone, so the same rows retrain
+            # the same quantizer on every run and every cluster size
+            corpus = corpus.repartition(n_out, id_col).sortWithinPartitions(id_col)
         new_manifest: dict
         if kind == "lsh":
             bits_new = int(bits if bits is not None

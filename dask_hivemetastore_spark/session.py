@@ -13,6 +13,7 @@ query at 200 partitions, BASELINE.md).
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 import weakref
@@ -121,6 +122,14 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
 
 
 _PYFILES_ADDED: set[str] = set()
+_PYFILES_ZIPS: set[str] = set()
+
+
+def _remove_quietly(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
@@ -141,6 +150,11 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     zpath = os.path.join(
         tempfile.gettempdir(), f"dask_hivemetastore_spark_pyfiles_{os.getpid()}.zip"
     )
+    if zpath not in _PYFILES_ZIPS:
+        # executors fetch the zip lazily, so it must outlive this call;
+        # remove it at interpreter exit instead of leaking it into tmp
+        _PYFILES_ZIPS.add(zpath)
+        atexit.register(_remove_quietly, zpath)
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in sorted(files):

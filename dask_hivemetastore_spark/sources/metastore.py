@@ -20,6 +20,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 from dataclasses import dataclass, field
 from urllib.parse import unquote
 
@@ -28,6 +29,12 @@ from pyspark.sql import functions as F
 
 from ..types import hive_schema_to_struct, parse_hive_type
 from .readers import HIVE_DEFAULT_DELIM, read_delimited
+
+# Raised around the scan's ``.parquet`` call (see ``read_table``). It is a
+# session conf, so the lock keeps concurrent callers from restoring each
+# other's raised value.
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
 
 
 @dataclass
@@ -132,6 +139,14 @@ class ThinCatalog:
 
         Pruned-before-read either way: directories failing the filter are
         never passed to the reader.
+
+        The scan lists the survivors on the driver, inside this call.
+        ``_partition_dirs`` has already walked every partition directory
+        locally, so Spark's distributed listing of more than
+        ``parallelPartitionDiscovery.threshold`` paths (one task per path,
+        re-run on every call) cannot beat it. The threshold is raised to
+        ``len(survivors)`` for the ``.parquet`` call only and restored
+        afterwards, also when the read raises.
         """
         t = self.get_table(name)
         if not t.partition_keys:
@@ -157,11 +172,18 @@ class ThinCatalog:
             # numeric ('01' → bigint 1 → '1'), silently diverging from
             # the union strategy's raw directory value (r7 review)
             full_schema = hive_schema_to_struct(t.columns + t.partition_keys)
-            out = (
-                spark.read.schema(full_schema)
-                .option("basePath", t.location)
-                .parquet(*locs)
-            )
+            reader = spark.read.schema(full_schema).option("basePath", t.location)
+            with _LISTING_LOCK:
+                prior = spark.conf.get(_LISTING_THRESHOLD, None)
+                threshold = int(spark.conf.get(_LISTING_THRESHOLD))
+                spark.conf.set(_LISTING_THRESHOLD, str(max(threshold, len(locs))))
+                try:
+                    out = reader.parquet(*locs)
+                finally:
+                    if prior is None:
+                        spark.conf.unset(_LISTING_THRESHOLD)
+                    else:
+                        spark.conf.set(_LISTING_THRESHOLD, prior)
         elif strategy == "union":
             frames: list[DataFrame] = []
             for pvals, loc in zip(parts, locs):

@@ -1579,7 +1579,13 @@ def band_state_groups(spark: SparkSession) -> int:
     with the cluster; ``SPARK_GRAFT_BAND_GROUPS`` overrides. At very
     large state-to-arrival ratios a deployment may prefer finer groups
     (each batch rewrites a touched group's whole membership map), so the
-    knob is the contract, the default the measured local/cluster shape."""
+    knob is the contract, the default the measured local/cluster shape.
+
+    Any deployment with a durable checkpoint must pin
+    ``SPARK_GRAFT_BAND_GROUPS``: ``G`` is part of the persisted state key,
+    so resuming on a cluster of a different size under the default would
+    re-route buckets to other groups, silently missing residents and
+    losing duplicate pairs."""
     env = os.environ.get("SPARK_GRAFT_BAND_GROUPS")
     if env is not None:
         return max(0, int(env))

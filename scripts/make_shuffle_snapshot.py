@@ -15,9 +15,20 @@ fingerprint (sorted per-scan output column lists).
 Streaming keys are skipped: their returned DataFrame is a memory-sink
 table scan whose executed plan carries none of the stream's shuffles.
 
+The session also pins ``defaultParallelism`` (``spark.default.parallelism``,
+recorded in the snapshot). The CPU-spread repartitions (``ngram_freq_top``,
+``doc_chunk_windows`` and the word-n-gram barriers) size their map side to it, so
+their shuffle records would otherwise follow the host's core count. Only
+the value is pinned: the master keeps the host's cores, so a replay on a
+small box does not start one task thread per pinned partition.
+
 Re-run + commit the snapshot ONLY when a deliberate plan change moves a
 pinned query's volume (the test failure message says which and by how
 much); an unexplained move is the regression the gate exists to catch.
+
+``--replay OUT`` profiles the snapshot's pinned keys under the snapshot's
+own session settings and writes them to ``OUT`` as JSON; the gate
+(tests/test_shuffle_budget.py) runs it in a fresh process.
 """
 
 from __future__ import annotations
@@ -31,16 +42,58 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = "/root/testdata/sf0.01"
 TOP_N = 20
+SHUFFLE_PARTITIONS = 8
+DEFAULT_PARALLELISM = 32
+SNAPSHOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "tests", "shuffle_snapshot.json",
+)
+
+
+def pinned_session(app_name: str, default_parallelism: int):
+    from dask_hivemetastore_spark.session import get_spark
+
+    spark = get_spark(
+        app_name=app_name, shuffle_partitions=SHUFFLE_PARTITIONS,
+        extra_confs={"spark.default.parallelism": str(default_parallelism)},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def session_settings(spark) -> dict[str, int]:
+    return {
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "default_parallelism": int(spark.sparkContext.defaultParallelism),
+    }
+
+
+def replay(out_path: str) -> None:
+    from plan_metrics import shuffle_profile
+
+    from dask_hivemetastore_spark import plans
+
+    with open(SNAPSHOT) as f:
+        snap = json.load(f)
+    spark = pinned_session("shuffle-replay", snap["default_parallelism"])
+    profiles: dict[str, dict] = {}
+    for key in sorted(snap["queries"]):
+        # cold-plan shape, as when the snapshot was recorded
+        spark.catalog.clearCache()
+        try:
+            profiles[key] = shuffle_profile(plans.QUERIES[key](spark, snap["sf_dir"]))
+        except Exception as exc:  # noqa: BLE001 — reported per key by the gate
+            profiles[key] = {"error": f"{type(exc).__name__}: {exc}"}
+    with open(out_path, "w") as f:
+        json.dump({**session_settings(spark), "queries": profiles}, f)
 
 
 def main() -> None:
     from plan_metrics import shuffle_profile
 
     from dask_hivemetastore_spark import plans
-    from dask_hivemetastore_spark.session import get_spark
 
-    spark = get_spark(app_name="shuffle-snapshot", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = pinned_session("shuffle-snapshot", DEFAULT_PARALLELISM)
 
     profiles: dict[str, dict[str, int]] = {}
     for key, fn in plans.QUERIES.items():
@@ -80,17 +133,14 @@ def main() -> None:
                 "scan fingerprint gate is BLIND for it",
                 file=sys.stderr,
             )
-    out = {
-        "sf_dir": SF_DIR,
-        "shuffle_partitions": 8,
-        "queries": top,
-    }
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(root, "tests", "shuffle_snapshot.json")
-    with open(path, "w") as f:
+    out = {"sf_dir": SF_DIR, **session_settings(spark), "queries": top}
+    with open(SNAPSHOT, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
-    print(f"\nwrote {path} with top {len(top)} by shuffle bytes")
+    print(f"\nwrote {SNAPSHOT} with top {len(top)} by shuffle bytes")
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--replay"]:
+        replay(sys.argv[2])
+    else:
+        main()

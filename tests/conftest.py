@@ -17,11 +17,12 @@ def spark():
     """One session-scoped SparkSession for the whole suite.
 
     SUITE INVARIANT (r10 ADVICE): no test module may rely on a
-    ``persist()``/``cache()`` surviving across module boundaries — the
-    shuffle/scan-fingerprint gate (tests/test_shuffle_budget.py) calls
-    ``spark.catalog.clearCache()`` before each pinned replay to get
-    cold-plan shape, and cache is APPLICATION-wide (a separate
-    ``newSession()`` would not isolate it). Caches are a per-module
+    ``persist()``/``cache()`` surviving across module boundaries — cache
+    is APPLICATION-wide (a separate ``newSession()`` would not isolate
+    it), so any module may clear it. The shuffle/scan-fingerprint gate
+    (tests/test_shuffle_budget.py) replays in its own process for the
+    same reason: a leftover persist would swap its FileScans for
+    InMemoryTableScan. Caches are a per-module
     performance detail here; recomputation after a clear is always
     correct, so the only cost of violating this is time — but a test
     ASSERTING on InMemoryTableScan plan shape must create the persist

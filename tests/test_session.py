@@ -42,3 +42,41 @@ def test_runtime_confs_memoized_per_session(spark):
     # but must still be fixed up.
     ensure_runtime_confs(s2)
     assert s2.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_pyfiles_zip_removed_at_exit(tmp_path):
+    """The package zip shipped to executors lives until interpreter exit
+    and no longer: a process that shipped it leaves no zip behind."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    from .conftest import REPO_ROOT
+
+    child = textwrap.dedent(f"""
+        import os, sys
+        sys.path.insert(0, {REPO_ROOT!r})
+        from dask_hivemetastore_spark.session import ensure_package_on_executors
+
+        class Context:
+            applicationId = "app-zip-test"
+            def addPyFile(self, path):
+                self.added = path
+
+        class Session:
+            sparkContext = Context()
+
+        s = Session()
+        ensure_package_on_executors(s)
+        print(s.sparkContext.added, os.path.exists(s.sparkContext.added))
+    """)
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    out = subprocess.run([sys.executable, "-c", child], env=env,
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    path, existed = out.stdout.split()
+    assert os.path.dirname(path) == str(tmp_path)
+    assert existed == "True"
+    assert not os.path.exists(path)
+    assert os.listdir(tmp_path) == []

@@ -12,6 +12,12 @@ the exchange COUNT exactly, and (r9) the pruned-column FINGERPRINT
 reading all columns for a 2-column projection changes the fingerprint
 even when bytes stay inside the band at sf0.01 (at 100 TB it would not).
 
+The replays run in a fresh process under the snapshot's own session
+settings: ``shuffle_partitions`` and ``default_parallelism``. Both move
+the volumes (compression framing per shuffle partition; map-side combine
+per CPU-spread map partition), so the verdict must not depend on the
+host's core count or on what earlier tests left in the suite's session.
+
 If a failure is a deliberate plan change, re-run
 ``python scripts/make_shuffle_snapshot.py`` and commit the diff with the
 explanation; an unexplained move is the regression this exists to catch.
@@ -21,12 +27,13 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 
 import pytest
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, os.path.join(os.path.dirname(_HERE), "scripts"))
+_SCRIPT = os.path.join(os.path.dirname(_HERE), "scripts", "make_shuffle_snapshot.py")
 
 SNAPSHOT = os.path.join(_HERE, "shuffle_snapshot.json")
 
@@ -39,25 +46,28 @@ def _load():
 _SNAP = _load()
 
 
+@pytest.fixture(scope="module")
+def replayed(tmp_path_factory):
+    out = tmp_path_factory.mktemp("shuffle_replay") / "profiles.json"
+    proc = subprocess.run(
+        [sys.executable, _SCRIPT, "--replay", str(out)],
+        capture_output=True, text=True, timeout=1500,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    with open(out) as f:
+        return json.load(f)
+
+
 @pytest.mark.parametrize("key", sorted(_SNAP["queries"]))
-def test_shuffle_volume_pinned(key, spark):
-    from plan_metrics import shuffle_profile
+def test_shuffle_volume_pinned(key, replayed):
+    for setting in ("shuffle_partitions", "default_parallelism"):
+        assert replayed[setting] == _SNAP[setting], (
+            f"replay ran under {setting}={replayed[setting]}, the snapshot "
+            f"was recorded under {_SNAP[setting]}"
+        )
 
-    from dask_hivemetastore_spark import plans
-
-    assert (
-        int(spark.conf.get("spark.sql.shuffle.partitions"))
-        == _SNAP["shuffle_partitions"]
-    ), "snapshot was recorded under a different shuffle partition count"
-
-    # The gate pins COLD-plan shape. A .persist() left behind by an
-    # earlier test swaps FileScans for InMemoryTableScan on any query
-    # sharing that logical subtree (suite-order-dependent: bit r9 on
-    # embedding_group_centroid / semdedup_survivors), which empties the
-    # scan fingerprint and zeroes scan_bytes. Clear it first.
-    spark.catalog.clearCache()
-
-    got = shuffle_profile(plans.QUERIES[key](spark, _SNAP["sf_dir"]))
+    got = replayed["queries"][key]
+    assert "error" not in got, f"{key}: replay failed: {got.get('error')}"
     want = _SNAP["queries"][key]
 
     assert got["n_shuffles"] == want["n_shuffles"], (

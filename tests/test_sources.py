@@ -227,6 +227,114 @@ def test_thin_catalog_scan_union_equivalence(spark, tmp_table_dir, sf_dir):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
+def test_thin_catalog_scan_lists_on_driver(spark, tmp_path, monkeypatch):
+    """A scan keeping more partitions than Spark's parallel-discovery
+    threshold lists them on the driver: no listing job, the session's
+    threshold conf left as it was (also when the read raises, and under
+    concurrent callers), and the same rows and schema as the union."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from dask_hivemetastore_spark.sources.metastore import (
+        _LISTING_THRESHOLD,
+        TableDef,
+        ThinCatalog,
+    )
+
+    nparts, kept = 48, 40
+    base = str(tmp_path / "listed")
+    spark.range(4 * nparts).selectExpr(
+        "id", f"CAST(id % {nparts} AS INT) AS pk"
+    ).write.partitionBy("pk").parquet(base)
+    cat = ThinCatalog()
+    cat.register(TableDef(name="t", location=base, columns=[("id", "bigint")],
+                          partition_keys=[("pk", "int")]))
+    flt = f"pk < {kept}"
+    assert len(cat.list_partitions("t", flt)) == kept
+    assert spark.conf.get(_LISTING_THRESHOLD, None) is None
+    assert kept > int(spark.conf.get(_LISTING_THRESHOLD))
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_launched(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, tracker.getJobIdsForGroup(group)
+
+    # control: a plain multi-path read of the survivors runs a listing job,
+    # so the zero below is the catalog's doing
+    locs = [os.path.join(base, f"pk={i}") for i in range(kept)]
+    _df, control = jobs_launched(
+        "listing-control",
+        lambda: spark.read.schema("id bigint, pk int")
+        .option("basePath", base).parquet(*locs),
+    )
+    assert control, "the plain reader no longer runs a listing job"
+
+    a, jobs = jobs_launched(
+        "listing-scan",
+        lambda: cat.read_table(spark, "t", partition_filter=flt, strategy="scan"),
+    )
+    assert jobs == [], f"read_table launched jobs {jobs}"
+    assert spark.conf.get(_LISTING_THRESHOLD, None) is None
+
+    b = cat.read_table(spark, "t", partition_filter=flt, strategy="union")
+    assert [(f.name, f.dataType) for f in a.schema.fields] == [
+        (f.name, f.dataType) for f in b.schema.fields
+    ]
+    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    assert a.count() == 4 * kept
+
+    # concurrent callers on one session never leave the conf changed: an
+    # unlocked read-modify-restore lets a late caller restore the raised
+    # value it read as "prior"
+    errors: list[Exception] = []
+
+    def reader():
+        try:
+            for _ in range(2):
+                cat.read_table(spark, "t", partition_filter=flt, strategy="scan")
+        except Exception as exc:  # noqa: BLE001 — surfaced below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=reader)
+               for _ in range((os.cpu_count() or 4) + 1)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    assert spark.conf.get(_LISTING_THRESHOLD, None) is None
+
+    # a read that raises restores an explicitly-set prior value
+    seen = []
+
+    def failing_parquet(self, *paths, **kw):
+        seen.append(spark.conf.get(_LISTING_THRESHOLD))
+        raise RuntimeError("listing failed")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", failing_parquet)
+    spark.conf.set(_LISTING_THRESHOLD, "16")
+    try:
+        with pytest.raises(RuntimeError, match="listing failed"):
+            cat.read_table(spark, "t", partition_filter=flt, strategy="scan")
+        assert seen == [str(kept)]
+        assert spark.conf.get(_LISTING_THRESHOLD) == "16"
+    finally:
+        spark.conf.unset(_LISTING_THRESHOLD)
+
+
 @pytest.mark.slow
 def test_thin_catalog_scan_planning_scales(spark, tmp_path):
     """At ~300 partitions the single-scan strategy must plan much faster
