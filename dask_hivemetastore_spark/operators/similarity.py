@@ -30,7 +30,7 @@ import math
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
 def dot_f64(a, b) -> Column:
@@ -737,6 +737,101 @@ def lsh_append(new_emb: DataFrame, index_path: str, *,
         _commit_append_marker(spark, root, epoch, "lsh_append")
 
 
+# ------------------------------------------------ batch probes, shared parts
+#
+# Every index family answers a batch of queries with one pruned scan and
+# a per-query ranking; a single-query probe is a batch of one. The
+# helpers below are the parts all three batch probes share.
+
+
+def _query_vectors(emb: DataFrame, query_ids: list, id_col: str,
+                   vec_col: str, dim: int | None) -> list:
+    """``[(q_id, vector)]`` for the eligible ids of a query batch. Corrupt
+    or absent ids drop out: they get no answer, never a wrong one."""
+    return [tuple(r) for r in (
+        finite_vectors(emb, vec_col, dim)
+        .where(F.col(id_col).isin([int(q) for q in query_ids]))
+        .select(id_col, vec_col)
+        .collect()  # bounded: len(query_ids) rows by construction
+    )]
+
+
+def _query_frame(spark, queries: list) -> DataFrame:
+    """The ``(q_id, __qv)`` relation the exact rescore broadcasts."""
+    return spark.createDataFrame(
+        [(q, [float(x) for x in v]) for q, v in queries],
+        "q_id long, __qv array<double>",
+    )
+
+
+def _empty_probe(spark, schema, cols: list) -> DataFrame:
+    """An empty ``(q_id, *cols, cosine)`` result whose column types come
+    from ``schema``, so it unions and compares like a non-empty one."""
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    return spark.createDataFrame([], StructType([
+        StructField("q_id", LongType()), *[schema[c] for c in cols],
+        StructField("cosine", DoubleType()),
+    ]))
+
+
+def _shortlisted(scored: DataFrame, exact_src: DataFrame, id_col: str,
+                 shortlist: int | None, k: int) -> DataFrame | None:
+    """The screen: keep each query's ``shortlist`` (default
+    ``max(4k, k+32)``) best ``__score`` ids of ``scored``, collect those
+    ``(q_id, id)`` pairs, and return the ``exact_src`` rows for them
+    paired to their queries; None when nothing survives.
+
+    The ids reach ``exact_src`` as a literal ``In(id, …)`` filter, not a
+    semi-join, so parquet pushes it down and the float column decodes
+    only for shortlist rows. The screen only prunes: the margin absorbs
+    the codes' bounded error and every returned cosine is the exact
+    rescore's."""
+    keep = shortlist if shortlist is not None else max(4 * k, k + 32)
+    w = Window.partitionBy("q_id").orderBy(F.desc("__score"), F.asc(id_col))
+    pairs = [(r[0], r[1]) for r in (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= keep)
+        .select("q_id", id_col)
+        .collect()  # bounded: <= Q * keep rows
+    )]
+    if not pairs:
+        return None
+    pair_df = exact_src.sparkSession.createDataFrame(
+        pairs, f"q_id long, {id_col} long")
+    return (
+        exact_src.where(F.col(id_col).isin(sorted({p[1] for p in pairs})))
+        .join(F.broadcast(pair_df), id_col)
+    )
+
+
+def _rescore_topk(src: DataFrame, qvecs: DataFrame, id_col: str,
+                  vec_col: str, cols: list, k: int) -> DataFrame:
+    """Exact JVM-fold cosine of every ``(q_id, row)`` pair in ``src``
+    against its query vector, non-finite scores dropped, then the k best
+    per query by ``(cosine desc, id asc)``."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc(id_col))
+    return (
+        src.join(F.broadcast(qvecs), "q_id")
+        .select("q_id", *cols,
+                F.round(dot_f64(F.col(vec_col), F.col("__qv")), 6)
+                .alias("cosine"))
+        .transform(_finite)
+        .withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= k)
+        .select("q_id", *cols, "cosine")
+    )
+
+
+def _one_query(top: DataFrame, k: int) -> DataFrame:
+    """A batch-of-one result as the single-query probes return it: no
+    ``q_id``, best first. The limit (a no-op on ≤ k rows) plans the sort
+    as a TakeOrderedAndProject, which needs no range-partition sampling
+    job."""
+    out = top.drop("q_id")
+    return out.orderBy(F.desc("cosine"), F.asc(out.columns[0])).limit(k)
+
+
 def lsh_probe_indexed(emb: DataFrame, index_path: str, query_id: int,
                       *, dim: int | None = None, bits: int | None = None,
                       n_tables: int | None = None,
@@ -745,171 +840,16 @@ def lsh_probe_indexed(emb: DataFrame, index_path: str, query_id: int,
                       seed: int | None = None, rescore: str = "auto",
                       shortlist: int | None = None,
                       row_filter: Column | None = None) -> DataFrame:
-    """Top-k against a :func:`lsh_build_index` postings layout. The
-    query's per-table probe sets are computed driver-side from the same
-    seeded planes (one bounded 1-row fetch for the query vector); the
-    postings scan condition ``OR_t (table = t AND bucket IN probes_t)``
-    carries a partition-key conjunct in every disjunct, so the scan
-    gets PartitionFilters on ``table`` (a caller probing a subset of
-    tables lists only those directories; this default probes all L) —
-    the within-table pruning is the PushedFilters bucket IN-lists
-    skipping row groups of the bucket-sorted files, and the ReadSchema
-    is pruned to (id, bucket). All three pinned at the plan level in
-    tests/test_plans.py.
-
-    Config resolves from the index MANIFEST (r13): probe with the path
-    alone; explicit parameters that contradict the build's fail loudly
-    (a wrong-seed probe silently returned bad candidates before).
-
-    Rescore (r13, VERDICT r12 next #4 — the stress honest-numbers
-    showed the exact FLOAT rescore of the ~45% candidate fraction
-    dominating probe wall time): with ``rescore="int8"`` (or "auto"
-    when the build materialized the sidecar) the candidate ids are
-    first SCREENED against the index's INT8 store — a pure-JVM
-    dequantized dot over 4×-narrower codes — and only the top
-    ``shortlist`` (default ``max(4k, k+32)``) screened ids pay the
-    exact float rescore, cutting scanned float bytes from
-    |candidates|·4d to |shortlist|·4d. The screen only PRUNES; every
-    returned cosine is the exact JVM fold, and the shortlist margin
-    absorbs the bounded INT8 reconstruction error (≤ scale/2 per
-    dimension), so the result stays identical to the inline
-    :func:`lsh_topk` at the same config — the identity pin in
-    tests/test_operators.py runs THIS default path. ``rescore="float"``
-    keeps the direct exact rescore of all candidates.
-
-    ``row_filter`` (r13): metadata PRE-filter — a Column predicate over
-    ``emb``'s columns that scopes the CANDIDATE set (candidates
-    semi-join the filtered corpus before the screen, the exact rescore
-    reads the filtered corpus), while the query row is fetched outside
-    the predicate. Equals ``lsh_topk`` over the pre-filtered corpus
-    (with the query row retained) — pinned in tests/test_layouts.py on
-    both rescore arms."""
-    from functools import reduce
-    from operator import or_
-
-    spark = emb.sparkSession
-    manifest = read_index_manifest(spark, index_path)
-    if manifest is not None:
-        _validate_manifest_params(
-            manifest,
-            {"dim": dim, "bits": bits, "n_tables": n_tables,
-             "seed": seed, "id_col": id_col, "vec_col": vec_col},
-            index_path,
-        )
-    dim = _resolved(manifest, "dim", dim)
-    bits = _resolved(manifest, "bits", bits, 8)
-    n_tables = _resolved(manifest, "n_tables", n_tables, 16)
-    seed = _resolved(manifest, "seed", seed, 42)
-    if dim is None:
-        raise ValueError(
-            "lsh_probe_indexed: dim not given and no manifest at "
-            f"{index_path} — build with lsh_build_index (r13+) or pass "
-            "dim explicitly"
-        )
-    if rescore not in ("auto", "int8", "float"):
-        raise ValueError(f"lsh_probe_indexed: unknown rescore={rescore!r}")
-    if rescore == "auto":
-        has_q = (
-            manifest.get("quantized", False) if manifest is not None
-            else _quantized_store_exists(spark, index_path)
-        )
-        rescore = "int8" if has_q else "float"
-    qrow = (
-        finite_vectors(emb, vec_col, dim)
-        .where(F.col(id_col) == query_id)
-        .select(vec_col)
-        .first()  # bounded: 1 row
-    )
-    # metadata PRE-filter (r13, the knn_filtered_topk semantics pushed
-    # into the index probe): the predicate scopes the CANDIDATES — the
-    # query row is fetched above, BEFORE the filter, so a query outside
-    # the predicate still answers. The filter restricts both the screen
-    # (via the candidate semi-join below) and the exact rescore, so the
-    # top-k ranks inside the filtered set — never the post-filter trap
-    # of ranking first and under-returning.
-    corpus = emb if row_filter is None else emb.where(row_filter)
-    if qrow is None:  # corrupt/absent query → no-answer, never wrong
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        # id type DERIVED from the corpus, not hardcoded — a bigint-vs-
-        # int mismatch with the non-empty path breaks schema-sensitive
-        # callers (unions, compares); same rule as _empty_topk (r8)
-        return spark.createDataFrame([], StructType([
-            emb.schema[id_col], StructField("cosine", DoubleType()),
-        ]))
-    qv = np.asarray(qrow[0], dtype=np.float64)
-    planes = _hyperplanes(dim, bits, seed=seed, n_tables=n_tables)
-    weights = 1 << np.arange(bits)
-    conds = []
-    for t in range(n_tables):
-        qb = int((((qv @ planes[t].T) > 0) * weights).sum())
-        probes = [qb] + (
-            [qb ^ (1 << i) for i in range(bits)] if multiprobe else []
-        )
-        conds.append(
-            (F.col("table") == t) & F.col("bucket").isin(probes)
-        )
-    cand = (
-        _read_index_root(spark, index_path, "table")
-        .where(reduce(or_, conds))
-        .select(id_col)
-        .distinct()
-    )
-    if row_filter is not None:
-        # restrict candidates BEFORE the screen: otherwise the INT8
-        # shortlist fills with predicate-failing ids (the sidecar has
-        # no metadata) and the final k under-returns
-        cand = cand.join(corpus.select(id_col), id_col, "left_semi")
-    qcol = F.array(*[F.lit(float(x)) for x in qv])
-    if rescore == "int8":
-        keep = shortlist if shortlist is not None else max(4 * k, k + 32)
-        short_ids = [r[0] for r in (
-            spark.read.parquet(_lsh_quantized_path(index_path))
-            .join(cand, id_col, "left_semi")
-            .where(F.col(id_col) != query_id)
-            .where(F.col("qvec").isNotNull())
-            .select(
-                id_col,
-                dot_f64(dequantize_expr(), qcol).alias("__ascore"),
-            )
-            # replayed plain appends may duplicate sidecar rows;
-            # duplicates are bit-identical, so any-row-wins is exact
-            .dropDuplicates([id_col])
-            .orderBy(F.desc("__ascore"), F.asc(id_col))
-            .limit(keep)
-            .collect()  # bounded: <= keep (~4k) rows by construction
-        )]
-        if not short_ids:
-            from pyspark.sql.types import (
-                DoubleType, StructField, StructType,
-            )
-
-            return spark.createDataFrame([], StructType([
-                emb.schema[id_col], StructField("cosine", DoubleType()),
-            ]))
-        # LITERAL id filter, not a semi-join (r13 perf): the shortlist
-        # is bounded and collected, so the exact rescore's corpus scan
-        # gets PushedFilters In(id, ...) — parquet row-group stats on
-        # the id column skip everything else, and the float column is
-        # only decoded for surviving rows. A semi-join would scan the
-        # FULL float column (no pushdown through a join), which is
-        # exactly the cost the INT8 screen exists to avoid.
-        exact_src = finite_vectors(corpus, vec_col, dim).where(
-            F.col(id_col).isin(short_ids)
-        )
-    else:
-        exact_src = finite_vectors(corpus, vec_col, dim).join(
-            cand, id_col, "left_semi"
-        )
-    return (
-        exact_src
-        .where(F.col(id_col) != query_id)
-        .select(id_col,
-                F.round(dot_f64(F.col(vec_col), qcol), 6).alias("cosine"))
-        .transform(_finite)
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    """Top-k ``(id, cosine)`` for one query id against a
+    :func:`lsh_build_index` postings layout, best first: the batch of one
+    ``[query_id]`` through :func:`lsh_probe_indexed_batch`, which
+    documents every parameter."""
+    return _one_query(lsh_probe_indexed_batch(
+        emb, index_path, [query_id], dim=dim, bits=bits, n_tables=n_tables,
+        k=k, multiprobe=multiprobe, id_col=id_col, vec_col=vec_col,
+        seed=seed, rescore=rescore, shortlist=shortlist,
+        row_filter=row_filter,
+    ), k)
 
 
 def lsh_probe_indexed_batch(emb: DataFrame, index_path: str,
@@ -924,43 +864,44 @@ def lsh_probe_indexed_batch(emb: DataFrame, index_path: str,
                             rescore: str = "auto",
                             shortlist: int | None = None,
                             row_filter: Column | None = None) -> DataFrame:
-    """Top-k for EVERY query in a bounded batch against ONE postings
-    scan — the serving shape (retrieval-augment a prompt batch) that a
-    :func:`lsh_probe_indexed` loop would pay Q postings scans and Q
-    shortlist jobs for. Returns ``(q_id, id_col, cosine)``, ≤ k rows
-    per query; per-query rows are IDENTICAL to the single-query probe
-    at the same config (same planes → same candidates → same screen →
-    same exact scores; pinned in tests/test_layouts.py).
+    """Top-k for every query in a bounded batch against a
+    :func:`lsh_build_index` postings layout, with ONE postings scan.
+    Returns ``(q_id, id_col, cosine)``, ≤ k rows per query.
+    :func:`lsh_probe_indexed` is this probe over one query.
 
-    Plan shape, all three stages batched:
+    Config (``dim``, ``bits``, ``n_tables``, ``seed``) resolves from the
+    index manifest; an explicit parameter that contradicts the build's
+    fails loudly, since a wrong seed would silently return bad
+    candidates.
 
-    1. **One postings scan.** The probe sets of all Q queries are
-       computed driver-side; the scan predicate is the same pushable
-       ``OR_t (table = t AND bucket IN ⋃_q probes_qt)`` disjunction as
-       the single-query probe (PartitionFilters on ``table``, bucket
-       IN-lists into row-group skipping — the unions are just wider),
-       and the exact per-(query, table, bucket) membership is then
-       decided by a broadcast join against the tiny probe-set relation
-       (Q·L·(bits+1) rows) — coarse pushed filter + precise broadcast
-       match, so batching never weakens the scan pruning story.
-    2. **One INT8 screen** (when the index carries the sidecar): the
-       distinct ``(q_id, id)`` candidate pairs join the codes once; a
-       per-query Window keeps the ``shortlist`` best screened ids; the
-       collected pair list is bounded by Q·shortlist.
-    3. **One exact rescore**: corpus rows for the UNION of shortlist
-       ids (pushed ``In(id, …)`` literal filter — the float column is
-       decoded only for shortlist rows), re-joined to the broadcast
-       query vectors, exact JVM-fold dot, Window top-k per query.
+    1. **Postings scan.** Each query's per-table probe sets (its bucket
+       plus, with ``multiprobe``, every bucket at hamming distance 1)
+       come from the same seeded planes, driver-side. The scan predicate
+       ``OR_t (table = t AND bucket IN ⋃_q probes_qt)`` carries a
+       partition-key conjunct in every disjunct, so the scan gets
+       PartitionFilters on ``table``, the bucket IN-lists push down to
+       skip row groups of the bucket-sorted files, and the ReadSchema is
+       pruned to (id, bucket); tests/test_plans.py pins all three. The
+       exact per-(query, table, bucket) membership is a broadcast join
+       against the Q·L·(bits+1)-row probe relation.
+    2. **INT8 screen** (``rescore="int8"``, or ``"auto"`` when the build
+       wrote the sidecar): the distinct ``(q_id, id)`` candidates are
+       scored on the 4×-narrower INT8 codes and only each query's
+       shortlist pays the exact float rescore (:func:`_shortlisted`).
+       ``rescore="float"`` rescores every candidate exactly.
+    3. **Exact rescore**: JVM-fold dot against the broadcast query
+       vectors, per-query top-k.
 
-    Corrupt/absent query ids contribute no rows (no-answer, never
-    wrong — same contract as :func:`knn_topk` / the single probe).
-    ``query_ids`` is bounded by construction (a batch, not a table);
-    tile and union for larger query sets, same plan per tile."""
+    ``row_filter`` is a metadata PRE-filter over ``emb``'s columns: it
+    scopes the candidates before the screen and the rescore, so the
+    top-k ranks inside the filtered set, while the query rows are
+    fetched outside it. The result equals :func:`lsh_topk` over the
+    pre-filtered corpus with the query row kept (tests/test_layouts.py).
+
+    Corrupt or absent query ids contribute no rows. ``query_ids`` is a
+    bounded batch; tile and union for larger query sets."""
     from functools import reduce
     from operator import or_
-
-    from pyspark.sql import types as T
-    from pyspark.sql.window import Window
 
     spark = emb.sparkSession
     manifest = read_index_manifest(spark, index_path)
@@ -977,13 +918,11 @@ def lsh_probe_indexed_batch(emb: DataFrame, index_path: str,
     seed = _resolved(manifest, "seed", seed, 42)
     if dim is None:
         raise ValueError(
-            "lsh_probe_indexed_batch: dim not given and no manifest at "
-            f"{index_path} — build with lsh_build_index (r13+) or pass "
-            "dim explicitly"
+            f"LSH probe: dim not given and no manifest at {index_path} — "
+            "build with lsh_build_index or pass dim explicitly"
         )
     if rescore not in ("auto", "int8", "float"):
-        raise ValueError(
-            f"lsh_probe_indexed_batch: unknown rescore={rescore!r}")
+        raise ValueError(f"LSH probe: unknown rescore={rescore!r}")
     if rescore == "auto":
         has_q = (
             manifest.get("quantized", False) if manifest is not None
@@ -991,47 +930,28 @@ def lsh_probe_indexed_batch(emb: DataFrame, index_path: str,
         )
         rescore = "int8" if has_q else "float"
 
-    out_schema = T.StructType([
-        T.StructField("q_id", T.LongType()),
-        emb.schema[id_col],
-        T.StructField("cosine", T.DoubleType()),
-    ])
-    qrows = (
-        finite_vectors(emb, vec_col, dim)
-        .where(F.col(id_col).isin([int(q) for q in query_ids]))
-        .select(id_col, vec_col)
-        .collect()  # bounded: len(query_ids) rows by construction
-    )
-    if not qrows:
-        return spark.createDataFrame([], out_schema)
-    # metadata PRE-filter (r13): same contract as the single probe —
-    # query rows fetched above OUTSIDE the predicate, candidates and
-    # rescore scoped inside it (see lsh_probe_indexed)
+    queries = _query_vectors(emb, query_ids, id_col, vec_col, dim)
+    if not queries:
+        return _empty_probe(spark, emb.schema, [id_col])
     corpus = emb if row_filter is None else emb.where(row_filter)
     planes = _hyperplanes(dim, bits, seed=seed, n_tables=n_tables)
     weights = 1 << np.arange(bits)
     probe_rows = []       # (q_id, table, bucket) — Q*L*(bits+1), tiny
-    qvec_rows = []        # (q_id, float64 vector)
     per_table: dict[int, set] = {t: set() for t in range(n_tables)}
-    for r in qrows:
-        qid = int(r[0])
-        qv = np.asarray(r[1], dtype=np.float64)
-        qvec_rows.append((qid, [float(x) for x in qv]))
+    for qid, v in queries:
+        qv = np.asarray(v, dtype=np.float64)
         for t in range(n_tables):
             qb = int((((qv @ planes[t].T) > 0) * weights).sum())
             probes = [qb] + (
                 [qb ^ (1 << i) for i in range(bits)] if multiprobe else []
             )
             per_table[t].update(probes)
-            probe_rows.extend((qid, t, int(b)) for b in probes)
+            probe_rows.extend((qid, t, b) for b in probes)
     probe_df = spark.createDataFrame(
         probe_rows, "q_id long, table int, bucket long"
     )
-    qvec_df = spark.createDataFrame(
-        qvec_rows, f"q_id long, __qv array<double>"
-    )
-    # coarse pushed filter (same shape as the single probe, wider
-    # IN-lists) + precise pair membership via the broadcast join
+    qvecs = _query_frame(spark, queries)
+    # coarse pushed filter + precise pair membership via the broadcast join
     coarse = reduce(or_, [
         (F.col("table") == t) & F.col("bucket").isin(sorted(bs))
         for t, bs in per_table.items() if bs
@@ -1045,54 +965,27 @@ def lsh_probe_indexed_batch(emb: DataFrame, index_path: str,
         .distinct()
     )
     if row_filter is not None:
-        # restrict pairs BEFORE the screen (sidecar carries no
-        # metadata) — same under-return reasoning as the single probe
+        # before the screen: the sidecar carries no metadata, so the
+        # shortlist would fill with predicate-failing ids and under-return
         cand = cand.join(corpus.select(id_col), id_col, "left_semi")
-    exact_dot = F.round(
-        dot_f64(F.col(vec_col), F.col("__qv")), 6
-    ).alias("cosine")
-    rank_w = Window.partitionBy("q_id")
+    exact_src = finite_vectors(corpus, vec_col, dim)
     if rescore == "int8":
-        keep = shortlist if shortlist is not None else max(4 * k, k + 32)
-        pairs = [(r[0], r[1]) for r in (
+        exact_src = _shortlisted(
             spark.read.parquet(_lsh_quantized_path(index_path))
             .join(cand, id_col)
             .where(F.col("qvec").isNotNull())
             .dropDuplicates(["q_id", id_col])  # replayed-append dups
-            .join(F.broadcast(qvec_df), "q_id")
-            .select(
-                "q_id", id_col,
-                dot_f64(dequantize_expr(), F.col("__qv")).alias("__a"),
-            )
-            .withColumn("__rn", F.row_number().over(
-                rank_w.orderBy(F.desc("__a"), F.asc(id_col))))
-            .where(F.col("__rn") <= keep)
-            .select("q_id", id_col)
-            .collect()  # bounded: <= Q * shortlist rows
-        )]
-        if not pairs:
-            return spark.createDataFrame([], out_schema)
-        pair_df = spark.createDataFrame(
-            pairs, f"q_id long, {id_col} long"
+            .join(F.broadcast(qvecs), "q_id")
+            .select("q_id", id_col,
+                    dot_f64(dequantize_expr(), F.col("__qv"))
+                    .alias("__score")),
+            exact_src, id_col, shortlist, k,
         )
-        all_ids = sorted({p[1] for p in pairs})
-        exact_src = (
-            finite_vectors(corpus, vec_col, dim)
-            .where(F.col(id_col).isin(all_ids))  # pushed In(id, ...)
-            .join(F.broadcast(pair_df), id_col)
-        )
+        if exact_src is None:
+            return _empty_probe(spark, emb.schema, [id_col])
     else:
-        exact_src = finite_vectors(corpus, vec_col, dim).join(cand, id_col)
-    return (
-        exact_src
-        .join(F.broadcast(qvec_df), "q_id")
-        .select("q_id", id_col, exact_dot)
-        .transform(_finite)
-        .withColumn("__rn", F.row_number().over(
-            rank_w.orderBy(F.desc("cosine"), F.asc(id_col))))
-        .where(F.col("__rn") <= k)
-        .select("q_id", id_col, "cosine")
-    )
+        exact_src = exact_src.join(cand, id_col)
+    return _rescore_topk(exact_src, qvecs, id_col, vec_col, [id_col], k)
 
 
 # ------------------------------------------- ANN index manifests (r13)
@@ -2473,89 +2366,137 @@ def ivf_probe_indexed(spark, index_path: str,
                       rescore: str = "auto",
                       shortlist: int | None = None,
                       row_filter: Column | None = None) -> DataFrame:
-    """Top-k against a materialized :func:`ivf_build_index` layout. The
-    ``cell IN (probes)`` filter is a partition-key predicate → the scan
-    lists only the probed directories. ``centroids=None`` (r13) resolves
-    the quantizer from the index manifest — a probe needs only the path
-    and the query vector.
+    """Top-k ``(id, label, cosine)`` for one query vector against a
+    :func:`ivf_build_index` layout, best first: a batch of one through
+    the batch probe (see :func:`ivf_probe_indexed_batch`). ``exclude_id``
+    masks that id (normally the query's own row); None masks nothing."""
+    return _one_query(_ivf_probe(
+        spark, index_path,
+        lambda *_: [(0 if exclude_id is None else exclude_id, query_vec)],
+        exclude_self=exclude_id is not None, centroids=centroids, k=k,
+        nprobe=nprobe, id_col=id_col, vec_col=vec_col, label_col="label",
+        dim=None, rescore=rescore, shortlist=shortlist,
+        row_filter=row_filter,
+    ), k)
 
-    ``row_filter`` (r13): metadata PRE-filter over the INDEX ROW's
-    columns (the IVF layout carries the full row, so label/metadata
-    predicates apply directly) — applied right after cell pruning and
-    BEFORE the screen/rescore, so the top-k ranks inside the filtered
-    set (never the post-filter under-return trap). Exactness pin: with
-    ``nprobe = n_cells`` the filtered probe equals brute-force knn over
-    the filtered corpus (tests/test_layouts.py). At real nprobe the
-    usual IVF recall caveat compounds with selectivity: a sparse
-    predicate empties probed cells — raise nprobe for highly selective
-    filters.
 
-    Rescore (r13, opt-in — the IVF twin of the LSH INT8 screen): on an
-    index built with ``int8_cols=True``, ``rescore="int8"`` (or "auto",
-    which detects the codes column) first scores the probed cells on
-    the 4×-narrower INT8 codes (pure JVM dequantized dot; the float
-    column's pages are never decoded for the screen thanks to parquet
-    column projection), collects the bounded shortlist
-    (``max(4k, k+32)`` ids), and re-scans ONLY those rows for the exact
-    float rescore via a PUSHED ``In(id, …)`` literal filter — scanned
-    float bytes drop from |probed cells|·4d to |shortlist|·4d. The
-    screen only prunes; every returned cosine is the exact JVM fold,
-    identical to the float path (pinned in tests/test_layouts.py).
-    Default behavior on existing float-only layouts is unchanged."""
+def ivf_probe_indexed_batch(emb: DataFrame, index_path: str,
+                            query_ids: list, *,
+                            centroids: np.ndarray | None = None,
+                            k: int = 5, nprobe: int = 8,
+                            id_col: str = "vec_id",
+                            vec_col: str = "embedding",
+                            label_col: str = "label",
+                            dim: int | None = None,
+                            rescore: str = "auto",
+                            shortlist: int | None = None,
+                            row_filter: Column | None = None) -> DataFrame:
+    """Top-k for every query in a bounded batch against ONE scan of a
+    materialized :func:`ivf_build_index` layout. Returns
+    ``(q_id, id_col, label_col, cosine)``, ≤ k rows per query; each
+    query's own row is masked. :func:`ivf_probe_indexed` is this probe
+    over one query vector.
+
+    1. **One pruned scan.** Each query's ``nprobe`` nearest cells come
+       from the centroids driver-side (``centroids=None`` reads them
+       from the manifest). The scan filter ``cell IN (union of probes)``
+       is a partition-key predicate, so only probed directories are
+       listed.
+    2. **Broadcast membership.** Precise (query, cell) pairing is a
+       broadcast join against the Q·nprobe-row probe relation: a row in
+       a shared cell fans out only to the queries that probed it.
+    3. **Rescore.** Float layouts: exact JVM-fold dot against the
+       broadcast query vectors, per-query top-k. INT8 layouts
+       (``int8_cols=True`` builds; ``rescore="auto"`` detects the
+       ``qvec`` column) screen on the dequantized codes first and
+       rescore only each query's shortlist (:func:`_shortlisted`).
+
+    ``row_filter`` is a metadata PRE-filter over the index row's columns
+    (the layout carries the full row), applied after cell pruning and
+    before the screen, so the top-k ranks inside the filtered set. With
+    ``nprobe = n_cells`` the result equals brute-force knn over the
+    filtered corpus (tests/test_layouts.py); at smaller nprobe a
+    selective predicate empties probed cells, so raise nprobe with it.
+
+    Corrupt or absent query ids contribute no rows. ``query_ids`` is a
+    bounded batch; tile and union for larger sets."""
+    return _ivf_probe(
+        emb.sparkSession, index_path,
+        lambda *cfg: _query_vectors(emb, query_ids, *cfg),
+        centroids=centroids, k=k, nprobe=nprobe, id_col=id_col,
+        vec_col=vec_col, label_col=label_col, dim=dim, rescore=rescore,
+        shortlist=shortlist, row_filter=row_filter,
+    )
+
+
+def _ivf_probe(spark, index_path: str, queries, *, centroids, k: int,
+               nprobe: int, id_col: str, vec_col: str, label_col: str,
+               dim: int | None, rescore: str, shortlist: int | None,
+               row_filter: Column | None,
+               exclude_self: bool = True) -> DataFrame:
+    """The IVF probe of :func:`ivf_probe_indexed_batch`.
+    ``queries(id_col, vec_col, dim)`` returns the batch's
+    ``[(q_id, vector)]`` once the manifest has resolved ``dim``;
+    ``exclude_self`` masks each query's ``q_id`` row."""
+    manifest = read_index_manifest(spark, index_path)
+    if manifest is not None:
+        _validate_manifest_params(
+            manifest, {"dim": dim, "vec_col": vec_col, "id_col": id_col},
+            index_path,
+        )
+        dim = _resolved(manifest, "dim", dim)
     if centroids is None:
-        m = read_index_manifest(spark, index_path)
-        if m is None or m.get("centroids") is None:
+        if manifest is None or manifest.get("centroids") is None:
             raise ValueError(
-                f"ivf_probe_indexed: centroids not given and no manifest "
-                f"at {index_path} — build with ivf_build_index (r13+) or "
-                "pass centroids explicitly"
+                f"IVF probe: centroids not given and no manifest at "
+                f"{index_path} — build with ivf_build_index or pass "
+                "centroids explicitly"
             )
-        centroids = np.asarray(m["centroids"], dtype=np.float64)
-    qv = np.asarray(query_vec, dtype=np.float64)
-    probes = [int(c) for c in (centroids @ qv).argsort()[::-1][:nprobe]]
-    idx = _read_index_root(spark, index_path, "cell") \
-        .where(F.col("cell").isin(probes))
+        centroids = manifest["centroids"]
+    centroids = np.asarray(centroids, dtype=np.float64)
+    if rescore not in ("auto", "int8", "float"):
+        raise ValueError(f"IVF probe: unknown rescore={rescore!r}")
+
+    queries = [(int(q), np.asarray(v, dtype=np.float64))
+               for q, v in queries(id_col, vec_col, dim)]
+    root = _read_index_root(spark, index_path, "cell")
+    if not queries:
+        return _empty_probe(spark, root.schema, [id_col, label_col])
+    probe_rows = []   # (q_id, cell) — Q*nprobe, tiny
+    for qid, qv in queries:
+        probe_rows.extend(
+            (qid, int(c)) for c in (centroids @ qv).argsort()[::-1][:nprobe]
+        )
+    cells = root.where(
+        F.col("cell").isin(sorted({c for _, c in probe_rows})))
+    idx = cells.join(
+        F.broadcast(spark.createDataFrame(probe_rows, "q_id long, cell int")),
+        "cell",
+    )
+    if exclude_self:
+        idx = idx.where(F.col(id_col) != F.col("q_id"))
     if row_filter is not None:
         idx = idx.where(row_filter)
-    if exclude_id is not None:
-        idx = idx.where(F.col(id_col) != exclude_id)
-    if rescore not in ("auto", "int8", "float"):
-        raise ValueError(f"ivf_probe_indexed: unknown rescore={rescore!r}")
+    qvecs = _query_frame(spark, queries)
     if rescore == "auto":
         rescore = "int8" if "qvec" in idx.columns else "float"
-    qcol = F.array(*[F.lit(float(x)) for x in qv])
     if rescore == "int8":
         if "qvec" not in idx.columns:
             raise ValueError(
-                "ivf_probe_indexed: rescore='int8' needs an index built "
-                "with int8_cols=True (no qvec column found)"
+                "IVF probe: rescore='int8' needs an index built with "
+                "int8_cols=True (no qvec column found)"
             )
-        keep = shortlist if shortlist is not None else max(4 * k, k + 32)
-        short_ids = [r[0] for r in (
+        idx = _shortlisted(
             idx.where(F.col("qvec").isNotNull())
-            .select(id_col,
-                    dot_f64(dequantize_expr(), qcol).alias("__ascore"))
-            .orderBy(F.desc("__ascore"), F.asc(id_col))
-            .limit(keep)
-            .collect()  # bounded: <= keep rows by construction
-        )]
-        if not short_ids:
-            from pyspark.sql.types import (
-                DoubleType, StructField, StructType,
-            )
-
-            return spark.createDataFrame([], StructType([
-                idx.schema[id_col], idx.schema["label"],
-                StructField("cosine", DoubleType()),
-            ]))
-        idx = idx.where(F.col(id_col).isin(short_ids))
-    return (
-        idx.select(id_col, "label",
-                   F.round(dot_f64(F.col(vec_col), qcol), 6).alias("cosine"))
-        .transform(_finite)
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+            .join(F.broadcast(qvecs), "q_id")
+            .select("q_id", id_col,
+                    dot_f64(dequantize_expr(), F.col("__qv"))
+                    .alias("__score")),
+            cells, id_col, shortlist, k,
+        )
+        if idx is None:
+            return _empty_probe(spark, root.schema, [id_col, label_col])
+    return _rescore_topk(idx, qvecs, id_col, vec_col, [id_col, label_col], k)
 
 
 def ivf_topk(emb: DataFrame, query_id: int, k: int = 10, n_cells: int = 16,
@@ -2904,6 +2845,34 @@ def pq_encode(emb: DataFrame, codebooks: np.ndarray,
     )
 
 
+def _adc_lookup(m: int, lut: str, code_col: str = "pq_code") -> Column:
+    """The asymmetric-distance score as a pure-JVM expression: the sum
+    of ``m`` lookups into ``lut``, a SQL (m × ksub) array of
+    query·centroid dots (a literal, or a column of a broadcast query
+    relation), indexed by the row's codes. The scan reads ONLY the code
+    column."""
+    return F.expr(
+        f"aggregate(sequence(1, {m}), 0D, (acc, i) -> acc + "
+        f"element_at(element_at({lut}, i), CAST({code_col}[i-1] AS INT) + 1))"
+    )
+
+
+def _adc_score_expr(codebooks: np.ndarray, query_vec,
+                    code_col: str = "pq_code") -> Column:
+    """:func:`_adc_lookup` for one query, its LUT shipped as a literal
+    nested array."""
+    m, ksub, dsub = codebooks.shape
+    q = np.asarray(query_vec, dtype=np.float64)
+    lut = np.einsum("mkd,md->mk", codebooks, q.reshape(m, dsub))
+    # float(v) before repr: numpy >= 2 renders repr(np.float64(x)) as
+    # "np.float64(x)", which would be invalid SQL
+    lut_sql = "array(" + ", ".join(
+        "array(" + ", ".join(f"{float(v)!r}D" for v in row) + ")"
+        for row in lut
+    ) + ")"
+    return _adc_lookup(m, lut_sql, code_col)
+
+
 def pq_adc_topk(codes: DataFrame, codebooks: np.ndarray, query_vec,
                 k: int = 10, id_col: str = "vec_id",
                 label_col: str = "label") -> DataFrame:
@@ -2919,22 +2888,7 @@ def pq_adc_topk(codes: DataFrame, codebooks: np.ndarray, query_vec,
 
     Returns (id_col, label_col, adc_score) — scores rounded to 6 dp.
     """
-    m, ksub, dsub = codebooks.shape
-    q = np.asarray(query_vec, dtype=np.float64)
-    lut = np.einsum(
-        "mkd,md->mk", codebooks, q.reshape(m, dsub)
-    )  # (m, ksub) dots
-    # float(v) before repr: numpy >= 2 renders repr(np.float64(x)) as
-    # "np.float64(x)", which would be invalid SQL (r7 review; the
-    # container's numpy 1.26 masked it)
-    lut_sql = "array(" + ", ".join(
-        "array(" + ", ".join(f"{float(v)!r}D" for v in row) + ")"
-        for row in lut
-    ) + ")"
-    score = F.expr(
-        f"aggregate(sequence(1, {m}), 0D, (acc, i) -> acc + "
-        f"element_at(element_at({lut_sql}, i), CAST(pq_code[i-1] AS INT) + 1))"
-    )
+    score = _adc_score_expr(codebooks, query_vec)
     return (
         codes.select(id_col, label_col, F.round(score, 6).alias("adc_score"))
         .orderBy(F.desc("adc_score"), F.asc(id_col))
@@ -3090,28 +3044,6 @@ def _residual_df(assigned: DataFrame, centroids: np.ndarray,
     return assigned.mapInPandas(kern, schema=schema)
 
 
-def _adc_score_expr(codebooks: np.ndarray, query_vec: np.ndarray,
-                    code_col: str = "pq_code") -> Column:
-    """The asymmetric-distance score as a pure-JVM literal-LUT
-    expression (deliberately mirrors :func:`pq_adc_topk`'s certified
-    expression, kept separate so the registered PQ key's engine is
-    untouched): the (m × ksub) query·centroid table ships as a literal
-    nested array and each code row costs m ``element_at`` lookups —
-    the scan reads ONLY the code column."""
-    m, ksub, dsub = codebooks.shape
-    q = np.asarray(query_vec, dtype=np.float64)
-    lut = np.einsum("mkd,md->mk", codebooks, q.reshape(m, dsub))
-    lut_sql = "array(" + ", ".join(
-        "array(" + ", ".join(f"{float(v)!r}D" for v in row) + ")"
-        for row in lut
-    ) + ")"
-    return F.expr(
-        f"aggregate(sequence(1, {m}), 0D, (acc, i) -> acc + "
-        f"element_at(element_at({lut_sql}, i), "
-        f"CAST({code_col}[i-1] AS INT) + 1))"
-    )
-
-
 def ivfpq_build_index(emb: DataFrame, index_path: str, *,
                       n_cells: int = 16, m: int = 16, ksub: int = 32,
                       seed: int = 42, id_col: str = "vec_id",
@@ -3144,12 +3076,11 @@ def ivfpq_build_index(emb: DataFrame, index_path: str, *,
     (:func:`ivf_drift_check_batch`) works unchanged — the coarse
     quantizer is the same artifact. Returns ``(centroids, codebooks)``.
 
-    ``residual=True`` (r14): codes encode ``x − centroid[cell]`` and
+    ``residual=True``: codes encode ``x − centroid[cell]`` and
     the codebooks train on residuals — FAISS's actual IVFPQ
     formulation. The probe adds the per-cell constant ``q·C[cell]``
-    back JVM-side (a literal map over the nprobe probed cells on the
-    single probe; a column of the broadcast probe relation on the
-    batch probe), so the scan still reads only the code column. Pays
+    back JVM-side (a column of the broadcast probe relation), so the
+    scan still reads only the code column. Pays
     when the coarse cells capture real structure (then the 16-byte
     budget spends itself on within-cell detail); on the
     near-uniform unit-sphere FIXTURE it measures level with the raw
@@ -3258,74 +3189,17 @@ def ivfpq_probe_indexed(spark, index_path: str, query_vec, k: int = 10,
                         nprobe: int = 8, shortlist: int | None = None,
                         exclude_id: int | None = None,
                         row_filter: Column | None = None) -> DataFrame:
-    """Top-k against a materialized :func:`ivfpq_build_index` layout,
-    path-only: cells ranked against the manifest's centroids →
-    ``cell IN (probes)`` partition pruning → ADC screen over the probed
-    cells reading ONLY the ``pq_code`` column (literal-LUT JVM
-    aggregate, :func:`_adc_score_expr`) → bounded shortlist collected →
-    exact JVM-fold rescore of just those rows via a pushed
-    ``In(id, …)`` literal filter. Every returned ``cosine`` is the
-    exact dot — ADC only prunes, it never decides (the
-    :func:`pq_topk_reranked` contract on the partitioned layout).
-
-    ``row_filter`` is the same metadata PRE-filter as
-    :func:`ivf_probe_indexed`'s: applied after cell pruning and before
-    the screen, so the top-k ranks inside the filtered set. Recall
-    caveats compose: cells not probed AND codes mis-ranked outside the
-    shortlist both cost recall — raise ``nprobe``/``shortlist`` for
-    guarantees (at ``nprobe = n_cells`` with a corpus-sized shortlist
-    this converges to brute force, the derived-oracle argument)."""
-    manifest = read_index_manifest(spark, index_path)
-    if manifest is None or manifest.get("kind") != "ivfpq":
-        raise ValueError(
-            f"ivfpq_probe_indexed: no ivfpq manifest at {index_path} — "
-            "build with ivfpq_build_index"
-        )
-    id_col = manifest.get("id_col", "vec_id")
-    C = np.asarray(manifest["centroids"], dtype=np.float64)
-    books = np.asarray(manifest["codebooks"], dtype=np.float64)
-    vec_col = manifest.get("vec_col", "embedding")
-    qv = np.asarray(query_vec, dtype=np.float64)
-    probes = [int(c) for c in (C @ qv).argsort()[::-1][:nprobe]]
-    idx = _read_index_root(spark, index_path, "cell").where(
-        F.col("cell").isin(probes)
-    )
-    if row_filter is not None:
-        idx = idx.where(row_filter)
-    if exclude_id is not None:
-        idx = idx.where(F.col(id_col) != exclude_id)
-    keep = shortlist if shortlist is not None else max(4 * k, k + 32)
-    adc = _adc_score_expr(books, qv)
-    if manifest.get("residual", False):
-        # residual codes approximate q·x = q·C[cell] + q·decode(code):
-        # the per-cell constant ships as a literal map over the nprobe
-        # probed cells (bounded), added JVM-side
-        pairs = [x for c in probes
-                 for x in (F.lit(int(c)), F.lit(float(C[c] @ qv)))]
-        adc = F.element_at(F.create_map(*pairs),
-                           F.col("cell").cast("int")) + adc
-    short_ids = [r[0] for r in (
-        idx.select(id_col, adc.alias("__adc"))
-        .orderBy(F.desc("__adc"), F.asc(id_col))
-        .limit(keep)
-        .collect()  # bounded: <= keep rows by construction
-    )]
-    if not short_ids:
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        return spark.createDataFrame([], StructType([
-            idx.schema[id_col], idx.schema["label"],
-            StructField("cosine", DoubleType()),
-        ]))
-    qcol = F.array(*[F.lit(float(x)) for x in qv])
-    return (
-        idx.where(F.col(id_col).isin(short_ids))
-        .select(id_col, "label",
-                F.round(dot_f64(F.col(vec_col), qcol), 6).alias("cosine"))
-        .transform(_finite)
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    """Top-k ``(id, label, cosine)`` for one query vector against a
+    :func:`ivfpq_build_index` layout, path-only, best first: a batch of
+    one through the batch probe (see :func:`ivfpq_probe_indexed_batch`).
+    ``exclude_id`` masks that id (normally the query's own row); None
+    masks nothing."""
+    return _one_query(_ivfpq_probe(
+        spark, index_path,
+        lambda *_: [(0 if exclude_id is None else exclude_id, query_vec)],
+        exclude_self=exclude_id is not None, k=k, nprobe=nprobe,
+        shortlist=shortlist, row_filter=row_filter,
+    ), k)
 
 
 def ivfpq_probe_indexed_batch(emb: DataFrame, index_path: str,
@@ -3334,126 +3208,92 @@ def ivfpq_probe_indexed_batch(emb: DataFrame, index_path: str,
                               shortlist: int | None = None,
                               row_filter: Column | None = None
                               ) -> DataFrame:
-    """Top-k for EVERY query in a bounded batch against ONE scan of a
-    materialized :func:`ivfpq_build_index` layout — completing batch
-    parity across all three families (:func:`lsh_probe_indexed_batch`,
-    :func:`ivf_probe_indexed_batch`). Same plan shape as the IVF batch
-    probe: one ``cell IN (union)`` partition-pruned scan, broadcast
-    Q·nprobe probe relation for precise (query, cell) membership — with
-    the ADC screen batched by shipping each query's (m × ksub) LUT as a
-    COLUMN of the broadcast query relation instead of a literal (the
-    single probe's literal LUT would grow the plan by Q × m × ksub
-    doubles): the screen is still a pure-JVM ``aggregate`` over
-    ``element_at(element_at(__lut, i), code+1)``, reading ONLY the code
-    column of the probed cells. A per-query Window keeps ``shortlist``,
-    the exact float rescore runs on the pushed ``In(id, …)`` union of
-    shortlists joined back to (q_id, id) pairs — the screen only
-    PRUNES, every returned cosine is the exact fold. Per-query rows are
-    IDENTICAL to :func:`ivfpq_probe_indexed` at the same config (pinned
-    in tests/test_layouts.py)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.window import Window
+    """Top-k for every query in a bounded batch against ONE scan of a
+    materialized :func:`ivfpq_build_index` layout, configured by its
+    manifest alone. Returns ``(q_id, id, label, cosine)``, ≤ k rows per
+    query; each query's own row is masked. :func:`ivfpq_probe_indexed`
+    is this probe over one query vector.
 
-    spark = emb.sparkSession
+    The plan is :func:`ivf_probe_indexed_batch`'s: one ``cell IN
+    (union)`` partition-pruned scan and a broadcast Q·nprobe probe
+    relation for precise (query, cell) membership. The screen is ADC:
+    each query's (m × ksub) LUT rides a column of a broadcast query
+    relation, and a pure-JVM ``aggregate`` over
+    ``element_at(element_at(__lut, i), code+1)`` scores the probed cells
+    reading ONLY the code column. Residual builds add the per-(query,
+    cell) constant ``q·C[cell]``, a column of the probe relation. Each
+    query's shortlist then gets the exact float rescore
+    (:func:`_shortlisted`); ADC only prunes, every returned cosine is
+    the exact fold.
+
+    ``row_filter`` is the same metadata PRE-filter as
+    :func:`ivf_probe_indexed_batch`'s. Recall caveats compose: cells not
+    probed and codes mis-ranked outside the shortlist both cost recall;
+    at ``nprobe = n_cells`` with a corpus-sized shortlist the probe
+    converges to brute force."""
+    return _ivfpq_probe(
+        emb.sparkSession, index_path,
+        lambda *cfg: _query_vectors(emb, query_ids, *cfg),
+        k=k, nprobe=nprobe, shortlist=shortlist, row_filter=row_filter,
+    )
+
+
+def _ivfpq_probe(spark, index_path: str, queries, *, k: int, nprobe: int,
+                 shortlist: int | None, row_filter: Column | None,
+                 exclude_self: bool = True) -> DataFrame:
+    """The IVF-PQ probe of :func:`ivfpq_probe_indexed_batch`.
+    ``queries(id_col, vec_col, dim)`` returns the batch's
+    ``[(q_id, vector)]`` once the manifest has named those;
+    ``exclude_self`` masks each query's ``q_id`` row."""
     manifest = read_index_manifest(spark, index_path)
     if manifest is None or manifest.get("kind") != "ivfpq":
         raise ValueError(
-            f"ivfpq_probe_indexed_batch: no ivfpq manifest at "
-            f"{index_path} — build with ivfpq_build_index"
+            f"IVF-PQ probe: no ivfpq manifest at {index_path} — build "
+            "with ivfpq_build_index"
         )
     id_col = manifest.get("id_col", "vec_id")
-    label_col = "label"
     vec_col = manifest.get("vec_col", "embedding")
-    dim = manifest.get("dim")
     C = np.asarray(manifest["centroids"], dtype=np.float64)
     books = np.asarray(manifest["codebooks"], dtype=np.float64)
     m, ksub, dsub = books.shape
-
-    out_schema = T.StructType([
-        T.StructField("q_id", T.LongType()),
-        emb.schema[id_col],
-        emb.schema[label_col],
-        T.StructField("cosine", T.DoubleType()),
-    ])
-    qrows = (
-        finite_vectors(emb, vec_col, dim)
-        .where(F.col(id_col).isin([int(q) for q in query_ids]))
-        .select(id_col, vec_col)
-        .collect()  # bounded: len(query_ids) rows by construction
-    )
-    if not qrows:
-        return spark.createDataFrame([], out_schema)
     residual = bool(manifest.get("residual", False))
+
+    queries = [(int(q), np.asarray(v, dtype=np.float64))
+               for q, v in queries(id_col, vec_col, manifest.get("dim"))]
+    root = _read_index_root(spark, index_path, "cell")
+    if not queries:
+        return _empty_probe(spark, root.schema, [id_col, "label"])
     probe_rows = []   # (q_id, cell, q·C[cell]) — Q*nprobe, tiny
-    qvec_rows = []    # (q_id, float64 vector, per-query ADC LUT)
-    union_cells: set[int] = set()
-    for r in qrows:
-        qid = int(r[0])
-        qv = np.asarray(r[1], dtype=np.float64)
+    lut_rows = []     # (q_id, per-query ADC LUT)
+    for qid, qv in queries:
         lut = np.einsum("mkd,md->mk", books, qv.reshape(m, dsub))
-        qvec_rows.append((
-            qid, [float(x) for x in qv],
-            [[float(v) for v in row] for row in lut],
-        ))
-        cells = [int(c) for c in (C @ qv).argsort()[::-1][:nprobe]]
-        union_cells.update(cells)
-        # the residual variant's per-(query, cell) constant q·C[cell]
-        # rides the probe relation — zero extra plan size
+        lut_rows.append((qid, lut.tolist()))
         probe_rows.extend(
-            (qid, c, float(C[c] @ qv) if residual else 0.0) for c in cells
+            (qid, int(c), float(C[c] @ qv) if residual else 0.0)
+            for c in (C @ qv).argsort()[::-1][:nprobe]
         )
-    probe_df = spark.createDataFrame(
-        probe_rows, "q_id long, cell int, __qdotc double")
-    qvec_df = spark.createDataFrame(
-        qvec_rows,
-        "q_id long, __qv array<double>, __lut array<array<double>>",
-    )
-    idx = (
-        _read_index_root(spark, index_path, "cell")
-        .where(F.col("cell").isin(sorted(union_cells)))
-        .join(F.broadcast(probe_df), "cell")
-        .where(F.col(id_col) != F.col("q_id"))  # self-pair mask
-    )
+    cells = root.where(
+        F.col("cell").isin(sorted({c for _, c, _ in probe_rows})))
+    idx = cells.join(F.broadcast(spark.createDataFrame(
+        probe_rows, "q_id long, cell int, __qdotc double")), "cell")
+    if exclude_self:
+        idx = idx.where(F.col(id_col) != F.col("q_id"))
     if row_filter is not None:
         idx = idx.where(row_filter)
-    keep = shortlist if shortlist is not None else max(4 * k, k + 32)
-    adc = F.expr(
-        f"aggregate(sequence(1, {m}), 0D, (acc, i) -> acc + "
-        f"element_at(element_at(__lut, i), "
-        f"CAST(pq_code[i-1] AS INT) + 1))"
-    )
+    adc = _adc_lookup(m, "__lut")
     if residual:
         adc = F.col("__qdotc") + adc
-    screen_w = Window.partitionBy("q_id").orderBy(
-        F.desc("__adc"), F.asc(id_col))
-    pairs = [(r[0], r[1]) for r in (
-        idx.join(F.broadcast(qvec_df.select("q_id", "__lut")), "q_id")
-        .select("q_id", id_col, adc.alias("__adc"))
-        .withColumn("__rn", F.row_number().over(screen_w))
-        .where(F.col("__rn") <= keep)
-        .select("q_id", id_col)
-        .collect()  # bounded: <= Q*keep rows by construction
-    )]
-    if not pairs:
-        return spark.createDataFrame([], out_schema)
-    short_ids = sorted({p[1] for p in pairs})
-    pair_df = spark.createDataFrame(pairs, f"q_id long, {id_col} long")
-    rank_w = Window.partitionBy("q_id").orderBy(
-        F.desc("cosine"), F.asc(id_col))
-    return (
-        _read_index_root(spark, index_path, "cell")
-        .where(F.col("cell").isin(sorted(union_cells)))
-        .where(F.col(id_col).isin(short_ids))
-        .join(F.broadcast(pair_df), id_col)
-        .join(F.broadcast(qvec_df.select("q_id", "__qv")), "q_id")
-        .select("q_id", id_col, label_col,
-                F.round(dot_f64(F.col(vec_col), F.col("__qv")), 6)
-                .alias("cosine"))
-        .transform(lambda d: _finite(d))
-        .withColumn("__rn", F.row_number().over(rank_w))
-        .where(F.col("__rn") <= k)
-        .select("q_id", id_col, label_col, "cosine")
+    luts = spark.createDataFrame(
+        lut_rows, "q_id long, __lut array<array<double>>")
+    src = _shortlisted(
+        idx.join(F.broadcast(luts), "q_id")
+        .select("q_id", id_col, adc.alias("__score")),
+        cells, id_col, shortlist, k,
     )
+    if src is None:
+        return _empty_probe(spark, root.schema, [id_col, "label"])
+    return _rescore_topk(src, _query_frame(spark, queries), id_col, vec_col,
+                         [id_col, "label"], k)
 
 
 # ---------------------------------------------------------------------------
@@ -4641,164 +4481,6 @@ def rrf_fuse(arms: list, id_col: str, *, k0: int = 60,
     return allc.groupBy(id_col).agg(
         F.sum("__c").alias("rrf_raw"),
         F.count("*").alias("n_arms"),
-    )
-
-
-def ivf_probe_indexed_batch(emb: DataFrame, index_path: str,
-                            query_ids: list, *,
-                            centroids: np.ndarray | None = None,
-                            k: int = 5, nprobe: int = 8,
-                            id_col: str = "vec_id",
-                            vec_col: str = "embedding",
-                            label_col: str = "label",
-                            dim: int | None = None,
-                            rescore: str = "auto",
-                            shortlist: int | None = None,
-                            row_filter: Column | None = None) -> DataFrame:
-    """Top-k for EVERY query in a bounded batch against ONE scan of a
-    materialized :func:`ivf_build_index` layout — the IVF sibling of
-    :func:`lsh_probe_indexed_batch` (r13). A production retriever
-    answers batches; an :func:`ivf_probe_indexed` loop pays Q
-    partition-pruned scans, the batch probe pays one.
-
-    Plan shape:
-
-    1. **One pruned scan.** Each query's ``nprobe`` nearest cells are
-       computed driver-side from the manifest centroids (a Q×n_cells
-       GEMM on the driver — centroids are a tiny model by contract);
-       the scan filter is ``cell IN (union of all queries' probes)`` —
-       still a partition-key predicate, so only probed directories are
-       listed (the union is just wider, exactly like the batch LSH
-       probe's bucket IN-lists).
-    2. **Broadcast membership.** Precise (query, cell) pairing is a
-       broadcast join against the Q·nprobe-row probe relation — a
-       corpus row in a shared cell fans out only to the queries that
-       actually probed that cell.
-    3. **Rescore.** Float layouts: exact JVM-fold dot against the
-       broadcast query vectors + one Window top-k per query. INT8
-       layouts (``int8_cols=True`` builds; ``rescore="auto"`` detects
-       the ``qvec`` column): the joined pairs are screened on the
-       dequantized codes first, a per-query Window keeps ``shortlist``
-       (default ``max(4k, k+32)``), and the exact float rescore runs
-       only on the pushed ``In(id, …)`` union of shortlists — same
-       contract as everywhere else: the screen only PRUNES, every
-       returned cosine is the exact fold.
-
-    Per-query rows are IDENTICAL to the single-query probe at the same
-    config (pinned in tests/test_layouts.py). Corrupt/absent query ids
-    contribute no rows (no-answer, never wrong). ``query_ids`` is
-    bounded by construction; tile and union for larger sets.
-    """
-    from pyspark.sql import types as T
-    from pyspark.sql.window import Window
-
-    spark = emb.sparkSession
-    manifest = read_index_manifest(spark, index_path)
-    if manifest is not None:
-        _validate_manifest_params(
-            manifest, {"dim": dim, "vec_col": vec_col, "id_col": id_col},
-            index_path,
-        )
-        dim = _resolved(manifest, "dim", dim)
-    if centroids is None:
-        if manifest is None or manifest.get("centroids") is None:
-            raise ValueError(
-                "ivf_probe_indexed_batch: centroids not given and no "
-                f"manifest at {index_path} — build with ivf_build_index "
-                "(r13+) or pass centroids explicitly"
-            )
-        centroids = np.asarray(manifest["centroids"], dtype=np.float64)
-    if rescore not in ("auto", "int8", "float"):
-        raise ValueError(
-            f"ivf_probe_indexed_batch: unknown rescore={rescore!r}")
-
-    out_schema = T.StructType([
-        T.StructField("q_id", T.LongType()),
-        emb.schema[id_col],
-        emb.schema[label_col],
-        T.StructField("cosine", T.DoubleType()),
-    ])
-    qrows = (
-        finite_vectors(emb, vec_col, dim)
-        .where(F.col(id_col).isin([int(q) for q in query_ids]))
-        .select(id_col, vec_col)
-        .collect()  # bounded: len(query_ids) rows by construction
-    )
-    if not qrows:
-        return spark.createDataFrame([], out_schema)
-    probe_rows = []   # (q_id, cell) — Q*nprobe, tiny
-    qvec_rows = []    # (q_id, float64 vector)
-    union_cells: set[int] = set()
-    for r in qrows:
-        qid = int(r[0])
-        qv = np.asarray(r[1], dtype=np.float64)
-        qvec_rows.append((qid, [float(x) for x in qv]))
-        cells = [int(c) for c in (centroids @ qv).argsort()[::-1][:nprobe]]
-        union_cells.update(cells)
-        probe_rows.extend((qid, c) for c in cells)
-    probe_df = spark.createDataFrame(probe_rows, "q_id long, cell int")
-    qvec_df = spark.createDataFrame(
-        qvec_rows, "q_id long, __qv array<double>"
-    )
-    idx = (
-        _read_index_root(spark, index_path, "cell")
-        .where(F.col("cell").isin(sorted(union_cells)))
-        .join(F.broadcast(probe_df), "cell")
-        .where(F.col(id_col) != F.col("q_id"))  # self-pair mask
-    )
-    if row_filter is not None:
-        # metadata PRE-filter (r13): index rows carry the full row, so
-        # the predicate applies directly, before screen/rescore — same
-        # contract and caveats as ivf_probe_indexed's row_filter
-        idx = idx.where(row_filter)
-    if rescore == "auto":
-        rescore = "int8" if "qvec" in idx.columns else "float"
-    rank_w = Window.partitionBy("q_id").orderBy(
-        F.desc("cosine"), F.asc(id_col))
-    if rescore == "int8":
-        if "qvec" not in idx.columns:
-            raise ValueError(
-                "ivf_probe_indexed_batch: rescore='int8' needs an index "
-                "built with int8_cols=True (no qvec column found)"
-            )
-        keep = shortlist if shortlist is not None else max(4 * k, k + 32)
-        screen_w = Window.partitionBy("q_id").orderBy(
-            F.desc("__ascore"), F.asc(id_col))
-        pairs = [(r[0], r[1]) for r in (
-            idx.where(F.col("qvec").isNotNull())
-            .join(F.broadcast(qvec_df), "q_id")
-            .select("q_id", id_col,
-                    dot_f64(dequantize_expr(), F.col("__qv"))
-                    .alias("__ascore"))
-            .withColumn("__rn", F.row_number().over(screen_w))
-            .where(F.col("__rn") <= keep)
-            .select("q_id", id_col)
-            .collect()  # bounded: <= Q*keep rows by construction
-        )]
-        if not pairs:
-            return spark.createDataFrame([], out_schema)
-        short_ids = sorted({p[1] for p in pairs})
-        pair_df = spark.createDataFrame(
-            pairs, f"q_id long, {id_col} long")
-        # pushed literal In(id) — the float column decodes only for
-        # shortlist rows (same reasoning as the single probe's screen)
-        exact_src = (
-            _read_index_root(spark, index_path, "cell")
-            .where(F.col("cell").isin(sorted(union_cells)))
-            .where(F.col(id_col).isin(short_ids))
-            .join(F.broadcast(pair_df), id_col)
-        )
-    else:
-        exact_src = idx
-    return (
-        exact_src.join(F.broadcast(qvec_df), "q_id")
-        .select("q_id", id_col, label_col,
-                F.round(dot_f64(F.col(vec_col), F.col("__qv")), 6)
-                .alias("cosine"))
-        .transform(lambda d: _finite(d))
-        .withColumn("__rn", F.row_number().over(rank_w))
-        .where(F.col("__rn") <= k)
-        .select("q_id", id_col, label_col, "cosine")
     )
 
 

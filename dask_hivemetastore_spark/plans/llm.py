@@ -445,7 +445,7 @@ def knn_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def knn_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K3 materialized IVF+PQ layout (r14) — the composition FAISS
+    """K3 materialized IVF+PQ layout — the composition FAISS
     calls IVFPQ, the canonical planet-scale serving shape: rows
     hive-partitioned by coarse k-means ``cell`` AND carrying the
     16-byte PQ code next to the float vector
@@ -454,7 +454,7 @@ def knn_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids and codebooks resolve from the manifest's lazy parquet
     sidecars) composes the two prunings MULTIPLICATIVELY: partition
     pruning reads nprobe/n_cells of the directories, the ADC screen
-    inside them reads ONLY the 16 B/row code column (literal-LUT JVM
+    inside them reads ONLY the 16 B/row code column (a pure-JVM LUT
     aggregate — 16× fewer bytes than the float column), and the exact
     JVM-fold rescore decodes float pages for just the bounded
     shortlist via a pushed ``In(vec_id, …)`` literal filter. Appends
@@ -519,18 +519,17 @@ def knn_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def knn_lsh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K3 batched ANN serving (r13): the LSH postings index probed for
+    """K3 batched ANN serving: the LSH postings index probed for
     a WHOLE query batch in ONE postings scan —
     :func:`..operators.similarity.lsh_probe_indexed_batch`. A
     production retriever answers batches, and a single-probe loop
     pays Q postings scans + Q shortlist jobs; the batch probe pays one
     of each (measured 1.7× faster than the loop at Q=8/sf0.1 — the
-    amortization grows with Q) while keeping the single probe's scan
-    shape: the pushed coarse disjunction is the same
-    ``table = t AND bucket IN (…)`` form with per-table unions, and
-    precise (query, bucket) membership is a broadcast join against
-    the Q·L·(bits+1)-row probe-set relation. Per-query rows are pinned
-    IDENTICAL to the single probe (tests/test_layouts.py).
+    amortization grows with Q). The pushed coarse disjunction is
+    ``table = t AND bucket IN (…)`` with per-table unions, and precise
+    (query, bucket) membership is a broadcast join against the
+    Q·L·(bits+1)-row probe-set relation. The single
+    ``lsh_probe_indexed`` is this same probe over one query.
 
     Same derived recall-verdict oracle family as ``knn_lsh_topk``: the
     key runs the batch probe for the 8 queries, measures mean
@@ -584,7 +583,7 @@ def knn_lsh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def knn_ivf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K3 batched ANN serving, IVF layout (r13): the cell-partitioned
+    """K3 batched ANN serving, IVF layout: the cell-partitioned
     index probed for a WHOLE query batch in ONE partition-pruned scan —
     :func:`..operators.similarity.ivf_probe_indexed_batch`, the IVF
     sibling of ``knn_lsh_join``. A single-probe loop pays Q pruned
@@ -592,9 +591,8 @@ def knn_ivf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     wider — still a partition-key predicate, so only probed
     directories are listed), with precise (query, cell) membership a
     broadcast join against the Q·nprobe-row probe relation and one
-    exact-fold rescore + per-query Window top-k. Per-query rows are
-    pinned IDENTICAL to the single ``ivf_probe_indexed`` at the same
-    config (tests/test_layouts.py).
+    exact-fold rescore + per-query Window top-k. The single
+    ``ivf_probe_indexed`` is this same probe over one query.
 
     Same derived recall-verdict oracle family as ``knn_lsh_join``: the
     key runs the batch probe for the 8 queries against a one-shot
@@ -603,10 +601,8 @@ def knn_ivf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-5 per query annotated with ``ivf_recall_floor_met`` =
     (mean recall ≥ 0.6), pinned to 1 by the brute-force oracle.
     Measured mean recall@5 across the 8 queries at nprobe=8 of 16
-    cells (r14 re-measure): 0.775 at sf0.001/sf0.01, 0.925 at sf0.1 —
-    the floor holds ≥1.29× margin everywhere (the r13 docstring's
-    "1.0" was the single-query q=0 number, not the batch mean; the
-    flag has always been computed live). Bounded collects only
+    cells: 0.775 at sf0.001/sf0.01, 0.925 at sf0.1 — the floor holds
+    ≥1.29× margin everywhere. Bounded collects only
     (Q query vectors + Q·k rows per arm)."""
     emb = load_table(spark, sf_dir, "embeddings")
     idx = scratch_dir("ivfjoin_") + "/index"
@@ -652,7 +648,7 @@ def knn_ivf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def knn_ivfpq_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K3 batched ANN serving, IVF+PQ layout (r14) — batch parity
+    """K3 batched ANN serving, IVF+PQ layout — batch parity
     across all three materialized families: a whole query batch served
     by ONE ``cell IN (union)`` partition-pruned scan of the IVFPQ index
     (:func:`..operators.similarity.ivfpq_probe_indexed_batch`). The ADC
@@ -660,8 +656,8 @@ def knn_ivfpq_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the broadcast query relation — still a pure-JVM aggregate over
     ONLY the 16-byte code column — then one pushed ``In(id, …)`` exact
     float rescore of the per-query shortlists and a per-query Window
-    top-k. Per-query rows are pinned IDENTICAL to the single
-    ``ivfpq_probe_indexed`` at the same config (tests/test_layouts.py).
+    top-k. The single ``ivfpq_probe_indexed`` is this same probe over
+    one query.
 
     Same derived recall-verdict oracle family as ``knn_ivf_join``: the
     key returns the exact batch top-5 (:func:`..operators.similarity.
@@ -1170,7 +1166,7 @@ def knn_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def hybrid_rank_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K3/K4 hybrid retrieval (r13): reciprocal-rank fusion of the
+    """K3/K4 hybrid retrieval: reciprocal-rank fusion of the
     sparse (Okapi BM25, query bag ['spark','hash','window'] — the
     ``bm25_rank_docs`` scorer verbatim) and dense (embedding-cosine vs
     the vec_id-0 query over the id-aligned ``embeddings`` table — the
@@ -1190,9 +1186,9 @@ def hybrid_rank_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fused sum is ≤2 IEEE additions of rank-determined doubles, and
     the final order uses the UNROUNDED sum with a doc_id tiebreak.
 
-    Serving composition (r14, VERDICT r13 missing #4): the dense arm is
-    interchangeable with the MATERIALIZED probes —
-    ``lsh_probe_indexed`` / ``ivf_probe_indexed_batch`` return the same
+    Serving composition: the dense arm is interchangeable with the
+    MATERIALIZED probes — ``lsh_probe_indexed`` (a batch of one) and
+    ``ivf_probe_indexed_batch`` return the same
     ``(vec_id, cosine)`` shape, so the fusion is oblivious to how the
     arm was served; fusion over the indexed arm is pinned identical to
     this brute-arm fusion at a recall-1.0 index config in

@@ -53,36 +53,32 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-#: Bounded FIFO of live audit persists (r18 hygiene, VERDICT r17 next
-#: #8): each frame is k-row bounded, but a long-lived service session
-#: invoking hundreds of audited queries would otherwise accumulate
-#: hundreds of cached frames — evict oldest-first past the cap
-#: (recomputation after eviction is always correct; conftest's suite
-#: invariant). NOTE the CacheManager interaction: Spark matches cached
-#: data by ANALYZED PLAN, and the load_table memo returns the same lazy
-#: plan per (session, sf_dir, table) — so within one session a repeat
-#: invocation of the same audited query builds the same plan and HITS
-#: this cache instead of recomputing. That is correct (same session,
-#: same inputs ⇒ same result) and irrelevant to the driver's protocol
-#: (fresh session per run), but a caller wanting forced recomputation
-#: in-session must clearCache() or disable the memo/persist env flags.
+#: Bounded FIFO of live audit persists: each frame is k-row bounded, but
+#: a long-lived service session invoking hundreds of audited queries
+#: would otherwise accumulate hundreds of cached frames, so the oldest
+#: are evicted past the cap (recomputation after eviction is always
+#: correct; conftest's suite invariant). Spark's CacheManager matches
+#: cached data by ANALYZED PLAN, and the load_table memo returns the same
+#: lazy plan per (session, sf_dir, table), so within one session a repeat
+#: invocation of the same audited query HITS this cache instead of
+#: recomputing. That is correct (same session, same inputs, same result);
+#: a caller wanting forced recomputation in-session must clearCache().
 _AUDIT_PERSISTED: list[DataFrame] = []
 _AUDIT_PERSIST_CAP = 64
 
 
 def audit_persist(df: DataFrame) -> DataFrame:
     """persist() for bounded audit frames that are collected in the query
-    body AND materialized again by the consumer (r17 optimization): with
-    the cache, the audited pipeline computes once; plan audits still
-    reach the cache's build plan through the InMemoryRelation walk
-    (scripts/plan_metrics.py — the dedup_near precedent). The frames are
-    k-row/pair-set bounded, so cache memory is trivial, and a bounded
-    FIFO evicts the oldest persists in long-lived sessions (r18).
-    ``SPARK_GRAFT_AUDIT_PERSIST=0`` disables it (A/B harness).
+    body AND materialized again by the consumer: with the cache, the
+    audited pipeline computes once, and plan audits still reach the
+    cache's build plan through the InMemoryRelation walk
+    (scripts/plan_metrics.py). A frame whose plan is already cached is
+    returned as is, so one cache entry holds one FIFO slot: a second
+    slot's eviction would unpersist data the newer caller relies on.
     """
-    import os
+    from pyspark import StorageLevel
 
-    if os.environ.get("SPARK_GRAFT_AUDIT_PERSIST", "1") == "0":
+    if df.storageLevel != StorageLevel.NONE:
         return df
     df = df.persist()
     _AUDIT_PERSISTED.append(df)

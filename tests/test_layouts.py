@@ -1565,6 +1565,52 @@ def test_ivfpq_batch_probe_identical_to_single_probes(spark, tmp_path):
     assert 999_999_999 not in batch
 
 
+def test_single_vector_probes_default_masks_nothing(spark, tmp_path):
+    """With the default ``exclude_id=None`` the IVF and IVF-PQ single
+    probes mask no row: the query's own row comes back first with cosine
+    1.0, followed by the ``exclude_id=q`` answer."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from dask_hivemetastore_spark.catalog import load_table
+    from dask_hivemetastore_spark.operators.similarity import (
+        finite_vectors,
+        ivf_build_index,
+        ivf_probe_indexed,
+        ivfpq_build_index,
+        ivfpq_probe_indexed,
+    )
+    from .conftest import SF_SMOKE
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    q = 3
+    qv = np.asarray(
+        finite_vectors(emb, "embedding", 64)
+        .where(F.col("vec_id") == q).select("embedding").first()[0],
+        dtype=np.float64,
+    )
+    ivf_idx = str(tmp_path / "ivf_self")
+    ivf_build_index(emb, ivf_idx, n_cells=8, cache_key=SF_SMOKE + "_self",
+                    dim=64, drift_reference=False)
+    pq_idx = str(tmp_path / "pq_self")
+    ivfpq_build_index(emb, pq_idx, n_cells=8, m=16, ksub=32,
+                      cache_key=SF_SMOKE + "_pqself", dim=64,
+                      drift_reference=False)
+
+    def rows(df):
+        return [(r.vec_id, r.cosine) for r in df.collect()]
+
+    for probe, args in ((ivf_probe_indexed, (spark, ivf_idx, None, qv)),
+                        (ivfpq_probe_indexed, (spark, pq_idx, qv))):
+        # the unmasked shortlist holds the query's own row plus the same
+        # 40 candidates the masked one screens in
+        got = rows(probe(*args, k=5, nprobe=4, shortlist=41))
+        masked = rows(probe(*args, k=4, nprobe=4, shortlist=40,
+                            exclude_id=q))
+        assert got[0] == (q, 1.0), (probe.__name__, got)
+        assert got[1:] == masked and len(got) == 5, probe.__name__
+
+
 def test_ivfpq_row_filter_prefilter_semantics(spark, tmp_path):
     """r14: the IVFPQ probes' row_filter is a PRE-filter — candidates
     are scoped before the ADC screen and the exact rescore, so at the
