@@ -133,7 +133,7 @@ def _empty_topk(emb: DataFrame, id_col: str, label_col: str) -> DataFrame:
         emb.schema[label_col],
         StructField("cosine", DoubleType()),
     ])
-    return emb.sparkSession.createDataFrame([], schema)
+    return _local_frame(emb.sparkSession, [], schema)
 
 
 def knn_topk(emb: DataFrame, query_id: int, k: int = 10,
@@ -166,7 +166,8 @@ def knn_topk_arrow(emb: DataFrame, query_id: int, k: int = 10,
     """Brute-force cosine top-k, Arrow/NumPy variant of :func:`knn_topk`
     — BASELINE.md's sanctioned fallback for the knn bench cell, pre-armed
     per VERDICT r10 #3 so a swap is a one-line flip with committed A/B
-    evidence (scripts/ab_knn_brute.py; PERF.md r11).
+    evidence (PERF.md "knn bench cell de-noised"; the A/B script is in
+    git history).
 
     Same plan shape as the JVM path (broadcast 1-row query, no corpus
     shuffle, TakeOrderedAndProject) but the dot product runs as one
@@ -756,9 +757,34 @@ def _query_vectors(emb: DataFrame, query_ids: list, id_col: str,
     )]
 
 
+def _local_frame(spark, rows: list, schema) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order; ``schema`` a DDL string or
+    ``StructType``) as a frame the JVM holds as a ``LocalRelation``.
+
+    The rows travel as one Arrow table, so the plan leaf is a
+    ``LocalTableScan`` and broadcasting it runs no Python-worker task,
+    where ``createDataFrame(list)`` gives a pickled ``LogicalRDD`` whose
+    every broadcast does. Above
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark itself
+    falls back to an RDD of Arrow batches; the rows are the same."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def _query_frame(spark, queries: list) -> DataFrame:
-    """The ``(q_id, __qv)`` relation the exact rescore broadcasts."""
-    return spark.createDataFrame(
+    """The ``(q_id, __qv)`` relation the exact rescore broadcasts, a JVM
+    ``LocalRelation`` (:func:`_local_frame`)."""
+    return _local_frame(
+        spark,
         [(q, [float(x) for x in v]) for q, v in queries],
         "q_id long, __qv array<double>",
     )
@@ -769,7 +795,7 @@ def _empty_probe(spark, schema, cols: list) -> DataFrame:
     from ``schema``, so it unions and compares like a non-empty one."""
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    return spark.createDataFrame([], StructType([
+    return _local_frame(spark, [], StructType([
         StructField("q_id", LongType()), *[schema[c] for c in cols],
         StructField("cosine", DoubleType()),
     ]))
@@ -780,7 +806,9 @@ def _shortlisted(scored: DataFrame, exact_src: DataFrame, id_col: str,
     """The screen: keep each query's ``shortlist`` (default
     ``max(4k, k+32)``) best ``__score`` ids of ``scored``, collect those
     ``(q_id, id)`` pairs, and return the ``exact_src`` rows for them
-    paired to their queries; None when nothing survives.
+    paired to their queries through a broadcast of the pairs as a JVM
+    ``LocalRelation`` (:func:`_local_frame`); None when nothing
+    survives.
 
     The ids reach ``exact_src`` as a literal ``In(id, …)`` filter, not a
     semi-join, so parquet pushes it down and the float column decodes
@@ -797,8 +825,8 @@ def _shortlisted(scored: DataFrame, exact_src: DataFrame, id_col: str,
     )]
     if not pairs:
         return None
-    pair_df = exact_src.sparkSession.createDataFrame(
-        pairs, f"q_id long, {id_col} long")
+    pair_df = _local_frame(
+        exact_src.sparkSession, pairs, f"q_id long, {id_col} long")
     return (
         exact_src.where(F.col(id_col).isin(sorted({p[1] for p in pairs})))
         .join(F.broadcast(pair_df), id_col)
@@ -947,8 +975,8 @@ def lsh_probe_indexed_batch(emb: DataFrame, index_path: str,
             )
             per_table[t].update(probes)
             probe_rows.extend((qid, t, b) for b in probes)
-    probe_df = spark.createDataFrame(
-        probe_rows, "q_id long, table int, bucket long"
+    probe_df = _local_frame(
+        spark, probe_rows, "q_id long, table int, bucket long"
     )
     qvecs = _query_frame(spark, queries)
     # coarse pushed filter + precise pair membership via the broadcast join
@@ -2470,7 +2498,7 @@ def _ivf_probe(spark, index_path: str, queries, *, centroids, k: int,
     cells = root.where(
         F.col("cell").isin(sorted({c for _, c in probe_rows})))
     idx = cells.join(
-        F.broadcast(spark.createDataFrame(probe_rows, "q_id long, cell int")),
+        F.broadcast(_local_frame(spark, probe_rows, "q_id long, cell int")),
         "cell",
     )
     if exclude_self:
@@ -3274,8 +3302,8 @@ def _ivfpq_probe(spark, index_path: str, queries, *, k: int, nprobe: int,
         )
     cells = root.where(
         F.col("cell").isin(sorted({c for _, c, _ in probe_rows})))
-    idx = cells.join(F.broadcast(spark.createDataFrame(
-        probe_rows, "q_id long, cell int, __qdotc double")), "cell")
+    idx = cells.join(F.broadcast(_local_frame(
+        spark, probe_rows, "q_id long, cell int, __qdotc double")), "cell")
     if exclude_self:
         idx = idx.where(F.col(id_col) != F.col("q_id"))
     if row_filter is not None:
@@ -3283,8 +3311,8 @@ def _ivfpq_probe(spark, index_path: str, queries, *, k: int, nprobe: int,
     adc = _adc_lookup(m, "__lut")
     if residual:
         adc = F.col("__qdotc") + adc
-    luts = spark.createDataFrame(
-        lut_rows, "q_id long, __lut array<array<double>>")
+    luts = _local_frame(
+        spark, lut_rows, "q_id long, __lut array<array<double>>")
     src = _shortlisted(
         idx.join(F.broadcast(luts), "q_id")
         .select("q_id", id_col, adc.alias("__score")),
@@ -4535,7 +4563,7 @@ def mmr_rerank(emb: DataFrame, query_id: int, k: int = 10,
         .collect()  # bounded: <= shortlist rows by construction
     )
     if not rows:
-        return emb.sparkSession.createDataFrame([], out_schema)
+        return _local_frame(emb.sparkSession, [], out_schema)
     # deterministic candidate order: relevance desc, id asc (the
     # shortlist's own certified order) — ties in the greedy argmax then
     # resolve to the lower id via argmax's first-occurrence rule
@@ -4560,4 +4588,4 @@ def mmr_rerank(emb: DataFrame, query_id: int, k: int = 10,
                     round(float(score[j]), 6)))
         red_j = V @ V[j]
         np.maximum(max_red, red_j, out=max_red)
-    return emb.sparkSession.createDataFrame(out, out_schema)
+    return _local_frame(emb.sparkSession, out, out_schema)

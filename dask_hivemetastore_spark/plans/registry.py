@@ -102,9 +102,10 @@ def verify_enabled() -> bool:
     columns and pin INT verdicts. That twin exists for CERTIFICATION;
     at 100 TB it is the difference between a sketch query (one scan,
     fixed-size state) and a second exact scan. Default ON — the
-    registered contract and every driver row are unchanged — and the
-    perf sweep / A/B harness (scripts/ab_verify_overhead.py) flips
-    ``SPARK_GRAFT_VERIFY=0`` to measure the sketch-only serving cost.
+    registered contract and every driver row are unchanged — and
+    ``SPARK_GRAFT_VERIFY=0`` serves the sketch-only path, whose cost
+    PERF.md "Derived-verdict overhead A/B" records (the A/B script that
+    measured it is in git history).
     With the flag off the verdict/exact columns emit NULL (same schema,
     no oracle validity)."""
     import os

@@ -1611,6 +1611,148 @@ def test_single_vector_probes_default_masks_nothing(spark, tmp_path):
         assert got[1:] == masked and len(got) == 5, probe.__name__
 
 
+def test_probe_plans_hold_no_python_relations(spark, tmp_path):
+    """The probes' small driver-side relations (query vectors, probe
+    cells or buckets, ADC LUTs, shortlist pairs, empty results) are JVM
+    LocalRelations: no optimized probe plan holds a ``LogicalRDD``,
+    whose broadcast would run Python-worker tasks. Rows equal the
+    brute-force references: ``knn_topk`` for IVF and IVF-PQ probed at
+    every cell, the inline ``lsh_topk`` for LSH."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from dask_hivemetastore_spark.catalog import load_table
+    from dask_hivemetastore_spark.operators.similarity import (
+        finite_vectors,
+        ivf_build_index,
+        ivf_probe_indexed,
+        ivf_probe_indexed_batch,
+        ivfpq_build_index,
+        ivfpq_probe_indexed,
+        ivfpq_probe_indexed_batch,
+        knn_topk,
+        lsh_build_index,
+        lsh_probe_indexed,
+        lsh_probe_indexed_batch,
+        lsh_topk,
+    )
+    from .conftest import SF_SMOKE
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    qids = [0, 3, 7]
+
+    def collected(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, plan
+        return [tuple(r) for r in df.collect()]
+
+    def per_query(df):
+        got: dict = {}
+        for r in collected(df):
+            got.setdefault(r[0], []).append(r[1:])
+        return {q: sorted(v) for q, v in got.items()}
+
+    brute = {q: [tuple(r) for r in knn_topk(emb, q, k=5, dim=64).collect()]
+             for q in qids}
+    inline = {q: [tuple(r) for r in lsh_topk(
+        emb, q, k=5, dim=64, bits=8, n_tables=4).collect()] for q in qids}
+    qv = np.asarray(
+        finite_vectors(emb, "embedding", 64)
+        .where(F.col("vec_id") == 3).select("embedding").first()[0],
+        dtype=np.float64,
+    )
+
+    for int8 in (False, True):
+        idx = str(tmp_path / f"ivf_{int8}")
+        ivf_build_index(emb, idx, n_cells=8, cache_key=SF_SMOKE + "_lr",
+                        dim=64, drift_reference=False, int8_cols=int8)
+        got = per_query(ivf_probe_indexed_batch(
+            emb, idx, qids + [123456], k=5, nprobe=8, dim=64))
+        assert got == {q: sorted(brute[q]) for q in qids}, int8
+        assert collected(ivf_probe_indexed(
+            spark, idx, None, qv, k=5, nprobe=8, exclude_id=3)) == brute[3]
+    assert collected(ivf_probe_indexed_batch(
+        emb, idx, [123456], k=5, nprobe=8, dim=64)) == []
+
+    pq = str(tmp_path / "pq")
+    ivfpq_build_index(emb, pq, n_cells=8, m=16, ksub=32,
+                      cache_key=SF_SMOKE + "_pqlr", dim=64,
+                      drift_reference=False)
+    got = per_query(ivfpq_probe_indexed_batch(
+        emb, pq, qids, k=5, nprobe=8, shortlist=200))
+    assert got == {q: sorted(brute[q]) for q in qids}
+    assert collected(ivfpq_probe_indexed(
+        spark, pq, qv, k=5, nprobe=8, shortlist=200,
+        exclude_id=3)) == brute[3]
+
+    lsh = str(tmp_path / "lsh")
+    lsh_build_index(emb, lsh, dim=64, bits=8, n_tables=4)
+    for arm in ("int8", "float"):
+        got = per_query(lsh_probe_indexed_batch(
+            emb, lsh, qids, k=5, rescore=arm))
+        assert got == {q: sorted(inline[q]) for q in qids}, arm
+    assert collected(lsh_probe_indexed(emb, lsh, query_id=3, k=5)) \
+        == inline[3]
+
+
+def test_local_frame_schema_rows_and_fallbacks(spark):
+    """``_local_frame`` keeps its schema exactly (nullability and
+    ``containsNull`` included) from a ``StructType`` or a DDL string,
+    gives an empty frame for no rows, and returns the same rows when
+    Spark falls back to an RDD (``localRelationThreshold=0``) or Arrow
+    conversion is off. Both confs are restored."""
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        IntegerType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    from dask_hivemetastore_spark.operators.similarity import _local_frame
+
+    strict = StructType([
+        StructField("a", LongType(), False),
+        StructField("b", IntegerType()),
+        StructField("c", DoubleType(), False),
+        StructField("d", ArrayType(DoubleType(), False)),
+        StructField("e", ArrayType(ArrayType(DoubleType()), False), False),
+    ])
+    ddl = "a long, b int, c double, d array<double>, e array<array<double>>"
+    rows = [(1, None, 0.5, [1.0, 2.0], [[1.0, None], []]),
+            (2, 7, -1.5, None, [[3.0]])]
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    for schema, want in ((strict, strict), (ddl, StructType.fromDDL(ddl))):
+        df = _local_frame(spark, rows, schema)
+        assert df.select("*").schema == want  # the JVM's schema
+        assert [tuple(r) for r in df.collect()] == rows
+        assert "LocalRelation" in plan(df)
+        empty = _local_frame(spark, [], schema)
+        assert empty.select("*").schema == want
+        assert empty.collect() == []
+
+    for key, value, leaf in (
+        ("spark.sql.execution.arrow.localRelationThreshold", "0",
+         "LogicalRDD"),
+        ("spark.sql.execution.arrow.pyspark.enabled", "false",
+         "LocalRelation"),
+    ):
+        old = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            df = _local_frame(spark, rows, strict)
+            assert leaf in plan(df), key
+            assert df.select("*").schema == strict, key
+            assert [tuple(r) for r in df.collect()] == rows, key
+        finally:
+            spark.conf.set(key, old)
+        assert spark.conf.get(key) == old
+
+
 def test_ivfpq_row_filter_prefilter_semantics(spark, tmp_path):
     """r14: the IVFPQ probes' row_filter is a PRE-filter — candidates
     are scoped before the ADC screen and the exact rescore, so at the

@@ -2,9 +2,10 @@
 r10 #7).
 
 Default ON is the driver contract — every registered oracle assumes the
-exact-twin verdict columns are real. OFF is the 100 TB serving path the
-A/B harness measures (scripts/ab_verify_overhead.py): the sketch plan
-runs WITHOUT its exact counterpart and the verdict columns emit NULL.
+exact-twin verdict columns are real. OFF is the 100 TB serving path
+whose cost PERF.md "Derived-verdict overhead A/B" records (the A/B
+script is in git history): the sketch plan runs WITHOUT its exact
+counterpart and the verdict columns emit NULL.
 Pinned here so neither arm can drift silently:
 
 - ON: full oracle parity (the driver's compare, via oracle_harness);
