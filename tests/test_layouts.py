@@ -3711,6 +3711,75 @@ def test_rollforward_empty_marker_snapshot_bumps_epoch(
     assert ann_index_verify(spark, idx)["ok"]
 
 
+def test_compact_crash_at_swapped_sentinel_rolls_forward(
+        spark, tmp_path, monkeypatch):
+    """Compaction commits the way rebuild does: the epoch-bumped
+    manifest write is the commit and the swapped sentinel comes after
+    it. A compaction that crashes writing ``_tomb_swapped.json`` has
+    therefore committed, and recover rolls it forward: the snapshotted
+    markers are consumed, the epoch stays e+1, probes return the rows
+    they returned before the crash, and verify is clean."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from dask_hivemetastore_spark.operators import similarity
+    from dask_hivemetastore_spark.catalog import load_table
+    from dask_hivemetastore_spark.operators.similarity import (
+        _list_append_markers,
+        ann_index_compact,
+        ann_index_recover,
+        ann_index_verify,
+        finite_vectors,
+        ivf_append,
+        ivf_build_index,
+        ivf_probe_indexed,
+        read_index_manifest,
+    )
+    from .conftest import SF_SMOKE
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    idx = str(tmp_path / "compact_swapped_crash")
+    ivf_build_index(emb.where(F.col("vec_id") % 2 == 0), idx, n_cells=8,
+                    dim=64, drift_reference=False)
+    ann_index_compact(spark, idx)  # a clean pass first: e = 1
+    ivf_append(emb.where(F.col("vec_id") % 2 == 1),
+               f"{idx}/ingest_batch=1", mode="overwrite")
+    e = int(read_index_manifest(spark, idx)["epoch"])
+    markers = _list_append_markers(spark, idx)
+    assert e == 1 and len(markers) == 1
+    qv = np.asarray(
+        finite_vectors(emb, "embedding", 64)
+        .where(F.col("vec_id") == 0).select("embedding").first()[0],
+        dtype=np.float64,
+    )
+
+    def probe():
+        return [tuple(r) for r in ivf_probe_indexed(
+            spark, idx, None, qv, k=10, nprobe=4, exclude_id=0).collect()]
+
+    want = probe()
+    real_wb = similarity._fs_write_bytes
+
+    def crash_on_swapped(spark_, path, data):
+        if path.endswith(similarity._TOMB_SWAPPED_SENTINEL):
+            raise RuntimeError("compact crash at swapped sentinel")
+        return real_wb(spark_, path, data)
+
+    monkeypatch.setattr(similarity, "_fs_write_bytes", crash_on_swapped)
+    with pytest.raises(RuntimeError, match="at swapped sentinel"):
+        ann_index_compact(spark, idx)
+    monkeypatch.setattr(similarity, "_fs_write_bytes", real_wb)
+
+    stats = ann_index_recover(spark, idx)
+    assert stats["rolled_forward"] > 0 and stats["recovered"] == 0
+    assert stats["markers_consumed"] == len(markers)
+    assert stats["pending_markers"] == 0
+    assert not _list_append_markers(spark, idx)
+    assert int(read_index_manifest(spark, idx)["epoch"]) == e + 1
+    assert probe() == want and len(want) == 10
+    assert ann_index_verify(spark, idx)["ok"]
+
+
 def test_recover_manifest_heal_survives_raising_rename(spark, tmp_path):
     """r17 (r16 advisor #3): the local ChecksumFileSystem (and some
     object-store adapters) report rename failure by THROWING. A
