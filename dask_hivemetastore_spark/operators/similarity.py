@@ -2194,8 +2194,8 @@ def ivf_append(new_emb: DataFrame, index_path: str,
 #: mean assignment cosine drops more than the threshold below the
 #: reference corpus's value — i.e. when the FIXED quantizer stops
 #: fitting the arriving data.
-#: Margin measured on the fixture (scripts/stress_ivf_scale.py drift
-#: arm): an in-distribution control batch moves the mean by under
+#: Margin measured on the fixture (PERF.md "IVF centroid drift"): an
+#: in-distribution control batch moves the mean by under
 #: +/-0.02 while an offset-and-renormalized shifted batch (alpha=2)
 #: drops it ~0.10-0.12 — the rule separates them with >2x margin on
 #: both sides. Occupancy concentration (max cell share, also returned
@@ -2952,9 +2952,9 @@ def pq_topk_reranked(emb: DataFrame, query_id: int, k: int = 10,
     ``shortlist`` must SCALE WITH THE CORPUS (≈1% of N), not stay a
     constant: measured on 50 k isotropic random vectors (the adversarial
     near-equidistant case for any ANN), recall@10 is 0.46 at shortlist 50
-    but 0.94 at 500 (1%) and 1.00 at 2000 — the curve is in
-    ``scripts/stress_knn.py`` / PERF.md. Real embedding corpora cluster,
-    which only helps.
+    but 0.94 at 500 (1%) and 1.00 at 2000 — the curve is in PERF.md
+    "Scale-stress spot check (round 6, #7)". Real embedding corpora
+    cluster, which only helps.
     """
     books = pq_train_codebooks(emb, m=m, ksub=ksub, id_col=id_col,
                                vec_col=vec_col, cache_key=cache_key, dim=dim)

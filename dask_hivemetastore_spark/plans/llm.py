@@ -407,8 +407,9 @@ def knn_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     against 4×-narrower codes, exact float rerank limited to the
     bounded shortlist via a PUSHED ``In(vec_id, …)`` literal filter
     (plan-pinned) — identical rows, measured faster wall AND ~2000×
-    fewer scanned float bytes at the 100× stress
-    (scripts/stress_lsh_scale.py, PERF.md r13)."""
+    fewer scanned float bytes at the 100× stress (PERF.md "LSH
+    indexed probe: INT8 screen + exact rerank"; the stress_lsh_scale
+    script is in git history)."""
     emb = load_table(spark, sf_dir, "embeddings")
     idx = scratch_dir("lshidx_") + "/postings"
     similarity.lsh_build_index(
@@ -960,7 +961,8 @@ def quality_calibrate_prefiltered(spark: SparkSession,
     one task: the windowed set shrinks to ≈ 20 % of the hot source +
     approximation slack. Output identity with the plain window is
     pinned in tests/test_curation.py; the measured skew datapoint is
-    scripts/stress_calibrate_skew.py (PERF.md r14)."""
+    PERF.md "Per-source calibration skew path" (the
+    stress_calibrate_skew script is in git history)."""
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
     )
@@ -1858,9 +1860,10 @@ def ivf_drift_check(spark: SparkSession, sf_dir: str) -> DataFrame:
       flag via :func:`..operators.similarity.ivf_drift_flag`
       (quantizer-FIT rule; batch occupancy is reported but never
       flags — a coherent batch legitimately concentrates, pinned in
-      tests/test_operators.py; margins measured in
-      scripts/stress_ivf_scale.py's drift arm and pinned in
-      tests/test_hostile_embeddings.py).
+      tests/test_operators.py; margins measured by the
+      stress_ivf_scale script's drift arm, now in git history, in
+      PERF.md "IVF centroid drift: measured retrain trigger", and
+      pinned in tests/test_hostile_embeddings.py).
 
     Threshold (r13, VERDICT r12 next #3): PER-INDEX, not the global
     constant — the reference is

@@ -19,9 +19,12 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 from pyspark.sql import SparkSession
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -31,14 +34,17 @@ def main() -> None:
     ap.add_argument("--n-cells", type=int, default=16)
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
     from dask_hivemetastore_spark.catalog import load_table
     from dask_hivemetastore_spark.operators.similarity import ivf_topk, knn_topk
-    from dask_hivemetastore_spark.session import ensure_runtime_confs
+    from dask_hivemetastore_spark.session import (
+        default_parallelism,
+        ensure_runtime_confs,
+    )
 
+    cpus = default_parallelism()
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

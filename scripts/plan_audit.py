@@ -104,10 +104,13 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from dask_hivemetastore_spark import plans
-    from dask_hivemetastore_spark.session import ensure_runtime_confs
+    from dask_hivemetastore_spark.session import (
+        default_parallelism,
+        ensure_runtime_confs,
+    )
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{default_parallelism()}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

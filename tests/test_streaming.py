@@ -243,10 +243,10 @@ def test_rocksdb_state_store_provider(spark):
 def test_streaming_keys_rocksdb_provider_parity(spark, key):
     """VERDICT r11 #6: the production provider (RocksDB) wired into
     REGISTERED streaming keys' test path, not just the stress scripts —
-    the 100×-scale evidence (1.5 M state keys on 8 g heap,
-    scripts/stress_stream_dedup.py --rocksdb) lives outside pytest, so a
-    provider regression in the registered dedup/sessionize paths would
-    otherwise surface only at stress time. Result sets must be
+    the 100×-scale evidence (1.5 M state keys on 8 g heap, PERF.md
+    "RocksDB closes the r10 stream-dedup heap note") lives outside
+    pytest, so a provider regression in the registered dedup/sessionize
+    paths would otherwise surface only at stress time. Result sets must be
     IDENTICAL across providers (the default-provider answer is the
     oracle-certified one)."""
     from dask_hivemetastore_spark import plans
