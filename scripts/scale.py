@@ -24,7 +24,10 @@ streaming path must agree with. Spark comes from the package's
   fewer files); a compaction crashed at its ``_tomb_swapped.json``
   write then ``ann_index_recover`` (same probe rows, clean
   ``ann_index_verify``); a rebuild (clean verify, exact full fan-out
-  probe).
+  probe). For a quantized LSH index, batch-keyed
+  ``subdir="ingest_batch=<i>"`` appends then a compaction (same probe
+  rows, clean deep verify with no postings id missing from the INT8
+  store).
 - ``stream_dedup``: a resident corpus, then small arrival batches,
   through the grouped band-bucket state of ``stream_dedup_near_docs``
   with a small membership cap and a boilerplate cluster past it.
@@ -302,6 +305,47 @@ def _maintain(spark, fam: str, work: str, flat, n: int, qids: list[int],
     return out, fails
 
 
+def _maintain_lsh(spark, work: str, flat,
+                  qids: list[int]) -> tuple[dict, list[str]]:
+    """Batch-keyed appends into a quantized LSH index, then a compaction
+    that folds them: the probe rows stay and a deep verify is clean."""
+    from pyspark.sql import functions as F
+
+    from dask_hivemetastore_spark.operators import similarity as S
+
+    idx = f"{work}/lsh"
+    part = lambda b: flat.where(F.col("vec_id") % N_BATCHES == b)  # noqa: E731
+    out: dict = {}
+    fails: list[str] = []
+    _, out["build_s"] = timed(lambda: S.lsh_build_index(
+        part(0), idx, dim=DIM, bits=8, n_tables=16))
+    _, out["ingest_s"] = timed(lambda: [
+        S.lsh_append(part(b), idx, subdir=f"ingest_batch={b}",
+                     mode="overwrite")
+        for b in range(1, N_BATCHES)])
+    probe = lambda: rows(S.lsh_probe_indexed_batch(flat, idx, qids, k=K))  # noqa: E731
+    before = probe()
+    stats, out["compact_s"] = timed(lambda: S.ann_index_compact(spark, idx))
+    out["files_in"], out["files_out"] = stats["n_files_in"], stats["n_files_out"]
+    if not before:
+        fails.append("lsh: the probe returned no rows")
+    if probe() != before:
+        fails.append("lsh: probe rows changed across compaction")
+    if not stats["n_files_out"] < stats["n_files_in"]:
+        fails.append(f"lsh: compaction left {stats['n_files_out']} of "
+                     f"{stats['n_files_in']} files")
+    if stats["n_batch_dirs_folded"] != N_BATCHES - 1:
+        fails.append(f"lsh: folded {stats['n_batch_dirs_folded']} of "
+                     f"{N_BATCHES - 1} batch dirs")
+    ver = S.ann_index_verify(spark, idx, deep=True)
+    out["ids_missing_from_int8_store"] = missing = ver["checks"].get(
+        "ids_missing_from_int8_store")
+    if not ver["ok"] or missing != 0:
+        fails.append(f"lsh: deep verify after compaction: {ver['problems']}, "
+                     f"{missing} ids missing from the INT8 store")
+    return out, fails
+
+
 def op_maintenance(spark, work: str, x: int, seed: int) -> dict:
     n = BASE_VECTORS * x
     vecs, qids, want = corpus(seed, n)
@@ -312,6 +356,8 @@ def op_maintenance(spark, work: str, x: int, seed: int) -> dict:
     for fam in ("ivf", "ivfpq_residual"):
         out[fam], f = _maintain(spark, fam, work, flat, n, qids, want)
         fails += f
+    out["lsh"], f = _maintain_lsh(spark, work, flat, qids)
+    fails += f
     out["verdict"] = (
         f"{n} vectors, IVF and residual IVF-PQ: {N_BATCHES - 2} batch "
         f"appends + compaction keep the probe rows "
@@ -319,7 +365,11 @@ def op_maintenance(spark, work: str, x: int, seed: int) -> dict:
         f"{out['ivfpq_residual']['files_in']} -> "
         f"{out['ivfpq_residual']['files_out']}), crash at the swapped "
         f"sentinel + recover keeps them and verifies clean, rebuild "
-        f"verifies clean with an exact full fan-out probe")
+        f"verifies clean with an exact full fan-out probe; quantized LSH: "
+        f"{N_BATCHES - 1} batch-keyed appends + compaction keep the probe "
+        f"rows (files {out['lsh']['files_in']} -> "
+        f"{out['lsh']['files_out']}), deep verify clean, 0 ids missing "
+        f"from the INT8 store")
     return out | {"failures": fails}
 
 
