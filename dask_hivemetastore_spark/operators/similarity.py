@@ -123,6 +123,32 @@ def _finite(df: DataFrame, col: str = "cosine") -> DataFrame:
     return df.where(F.abs(F.col(col)) < F.lit(float("inf")))
 
 
+def _per_batch(kernel: Callable, vec_col: str) -> Callable:
+    """The ``mapInPandas`` function of a numpy vector kernel: for every
+    non-empty Arrow batch ``pdf`` it calls ``kernel(pdf, X)``, ``X`` the
+    batch's ``vec_col`` as a float64 matrix, and yields the frame the
+    kernel returns (None yields nothing). The function keeps the
+    kernel's name, which the plan shows."""
+    def run(batches):
+        for pdf in batches:
+            if len(pdf):
+                out = kernel(pdf, np.stack(
+                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]))
+                if out is not None:
+                    yield out
+
+    run.__name__ = kernel.__name__
+    return run
+
+
+def _nearest_centroid(X: np.ndarray, C: np.ndarray):
+    """Each row's nearest centroid by dot product (the nearest by cosine
+    for unit rows and centroids) and that dot: ``(cell, dot)``."""
+    D = X @ C.T
+    cell = D.argmax(axis=1)
+    return cell, D[np.arange(len(X)), cell]
+
+
 def _empty_topk(emb: DataFrame, id_col: str, label_col: str) -> DataFrame:
     """Empty (id, label, cosine) frame whose id/label types are DERIVED from
     the corpus schema — a hardcoded ``long``/``int`` DDL would mismatch the
@@ -151,69 +177,22 @@ def knn_topk(emb: DataFrame, query_id: int, k: int = 10,
     an empty result (no-answer, never wrong-answer).
     """
     src = finite_vectors(emb, vec_col, dim)
-    q = src.where(F.col(id_col) == query_id).select(F.col(vec_col).alias("__qv"))
+    return _exact_topk(src.where(F.col(id_col) != query_id), src, query_id,
+                       k, id_col, "label", vec_col)
+
+
+def _exact_topk(cands: DataFrame, qsrc: DataFrame, query_id: int, k: int,
+                id_col: str, label_col: str, vec_col: str) -> DataFrame:
+    """Top-k ``(id, label, cosine)`` of ``cands`` by the exact JVM-fold
+    dot with ``query_id``'s vector in ``qsrc``, best first: the one
+    query row broadcasts and the ``orderBy(...).limit(k)`` lowers to a
+    TakeOrderedAndProject."""
+    q = qsrc.where(F.col(id_col) == query_id).select(
+        F.col(vec_col).alias("__qv"))
     return (
-        src.where(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(id_col, "label", F.round(dot_f64(F.col(vec_col), F.col("__qv")), 6).alias("cosine"))
-        .transform(_finite)
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def knn_topk_arrow(emb: DataFrame, query_id: int, k: int = 10,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   dim: int | None = None, overfetch: int = 40) -> DataFrame:
-    """Brute-force cosine top-k, Arrow/NumPy variant of :func:`knn_topk`
-    — BASELINE.md's sanctioned fallback for the knn bench cell, pre-armed
-    per VERDICT r10 #3 so a swap is a one-line flip with committed A/B
-    evidence (PERF.md "knn bench cell de-noised"; the A/B script is in
-    git history).
-
-    Same plan shape as the JVM path (broadcast 1-row query, no corpus
-    shuffle, TakeOrderedAndProject) but the dot product runs as one
-    vectorized ``vecs @ qv`` GEMV per Arrow batch instead of the
-    whole-stage-codegen ``aggregate``/``zip_with`` fold. Result contract
-    is IDENTICAL to :func:`knn_topk`: NumPy's pairwise-summed float64
-    dots decide only a k+``overfetch`` SHORTLIST (reassociation drift vs
-    the sequential fold is ~1 ulp — ``overfetch`` absorbs any boundary
-    swap), then the exact JVM-fold rescore of those rows produces the
-    emitted cosines, bit-identical to the oracle's ``list_sum``."""
-    src = finite_vectors(emb, vec_col, dim)
-    q = src.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__qv")
-    )
-
-    def dots(batches):
-        qv = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if qv is None:
-                qv = np.asarray(pdf["__qv"].iloc[0], dtype=np.float64)
-            vecs = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            yield pd.DataFrame({id_col: pdf[id_col], "__d": vecs @ qv})
-
-    cand = (
-        src.where(F.col(id_col) != query_id)
-        .select(id_col, vec_col)
-        .crossJoin(F.broadcast(q))
-        .mapInPandas(dots, f"{id_col} long, __d double")
-        .transform(lambda d: _finite(d, "__d"))
-        .orderBy(F.desc("__d"), F.asc(id_col))
-        .limit(k + overfetch)
-        .select(id_col)
-    )
-    return (
-        src.join(F.broadcast(cand), id_col)
-        .crossJoin(F.broadcast(q))
-        .select(
-            id_col, "label",
-            F.round(dot_f64(F.col(vec_col), F.col("__qv")), 6).alias("cosine"),
-        )
+        cands.crossJoin(F.broadcast(q))
+        .select(id_col, label_col,
+                F.round(dot_f64(F.col(vec_col), F.col("__qv")), 6).alias("cosine"))
         .transform(_finite)
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)
@@ -277,7 +256,6 @@ def similar_pairs(emb: DataFrame, threshold: float,
     ``cosine <= 1 + eps`` on the returned frame — it carries the exact
     rescored value.
     """
-    import math
     import warnings
 
     # eligibility at the door (r10 hostile-embeddings gate): one
@@ -405,30 +383,25 @@ def lsh_bucket_ids(emb: DataFrame, dim: int, bits: int = 12,
                    n_tables: int = 1, seed: int = 42) -> DataFrame:
     """Random-hyperplane (sign) LSH: per-table bucket id = sign-bit
     pattern of ``bits`` projections, one independent table per entry of
-    the ``buckets`` array (r12 multi-table upgrade — L tables is the
+    the ``buckets`` array (L tables is the
     standard recall dial when a single table's collision probability is
     too low, as on near-orthogonal corpora). ONE vectorized pass computes
     all tables' projections; deterministic (seeded) planes."""
     planes = _hyperplanes(dim, bits, seed=seed, n_tables=n_tables)
     weights = 1 << np.arange(bits)
 
-    def bucketize(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vecs = np.stack(pdf[vec_col].to_numpy())
-            ids = [
-                (((vecs @ planes[t].T) > 0) * weights).sum(axis=1)
-                for t in range(n_tables)
-            ]
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "buckets": np.stack(ids, axis=1).astype(np.int64).tolist(),
-            })
+    def bucketize(pdf, X):
+        ids = [(((X @ planes[t].T) > 0) * weights).sum(axis=1)
+               for t in range(n_tables)]
+        return pd.DataFrame({
+            id_col: pdf[id_col],
+            "buckets": np.stack(ids, axis=1).astype(np.int64).tolist(),
+        })
 
     return finite_vectors(
         emb.select(id_col, vec_col), vec_col, dim
-    ).mapInPandas(bucketize, f"{id_col} long, buckets array<long>")
+    ).mapInPandas(_per_batch(bucketize, vec_col),
+                  f"{id_col} long, buckets array<long>")
 
 
 def lsh_topk(emb: DataFrame, query_id: int, k: int = 10, bits: int = 8,
@@ -1540,83 +1513,80 @@ def _validate_manifest_params(manifest: dict, given: dict,
             )
 
 
+def _drift_rows(emb: DataFrame, C: np.ndarray, vec_col: str,
+                dim: int | None, id_col: str | None = None,
+                n_slices: int = 1) -> list:
+    """The drift aggregate of ``emb`` against centroids ``C``: one
+    collected ``(slice, cell, n, s)`` row per ``id % n_slices`` slice
+    (slice 0 for every row without ``id_col``) and nearest cell, ``n``
+    its row count and ``s`` the sum of its rows' cosines to that cell.
+    Rows are L2-normalized first, so one legal large-magnitude vector
+    cannot inflate the sum, and zero-norm rows, which carry no
+    direction, are left out (the oracle's ``norm > 0`` term in
+    ``ivf_drift_check``). At most ``n_slices × n_cells`` rows."""
+
+    def kern(pdf, X):
+        norms = np.linalg.norm(X, axis=1)
+        nz = norms > 0
+        if not nz.any():
+            return None
+        cell, adot = _nearest_centroid(X[nz] / norms[nz, None], C)
+        return pd.DataFrame({
+            "slice": ((pdf[id_col].to_numpy()[nz] % n_slices).astype(np.int32)
+                      if id_col else np.zeros(len(cell), dtype=np.int32)),
+            "cell": cell.astype(np.int32),
+            "adot": adot,
+        })
+
+    cols = [id_col, vec_col] if id_col else [vec_col]
+    return (
+        finite_vectors(emb.select(*cols), vec_col, dim)
+        .mapInPandas(_per_batch(kern, vec_col),
+                     "slice int, cell int, adot double")
+        .groupBy("slice", "cell")
+        .agg(F.count("*").alias("n"), F.sum("adot").alias("s"))
+        .collect()  # bounded: <= n_slices * n_cells rows
+    )
+
+
+def _drift_summary(rows: list) -> tuple[float, float, int]:
+    """``(mean cosine, max cell share, n)`` over :func:`_drift_rows`."""
+    n_tot = int(sum(r.n for r in rows))
+    if n_tot == 0:
+        return float("nan"), float("nan"), 0
+    by_cell: dict[int, int] = {}
+    for r in rows:
+        by_cell[r.cell] = by_cell.get(r.cell, 0) + int(r.n)
+    return (float(sum(r.s for r in rows)) / n_tot,
+            max(by_cell.values()) / n_tot, n_tot)
+
+
 def ivf_drift_reference(emb: DataFrame, centroids: np.ndarray, *,
                         dim: int | None = None, id_col: str = "vec_id",
                         vec_col: str = "embedding",
                         n_slices: int = 10) -> dict:
     """Training-time drift REFERENCE for an IVF index, computed once at
     build and stored in the manifest so per-batch monitors never rescan
-    the resident corpus: the corpus-wide mean assignment cosine
-    (``ref_mean``), its max cell share (``ref_max_share``), the eligible
-    row count (``n``), and — the r13 per-index threshold input —
-    ``ref_sigma``, the sample standard deviation of per-SLICE mean
-    assignment cosines over ``n_slices`` deterministic corpus slices
+    the resident corpus: the statistics :func:`ivf_drift_stats` gives a
+    batch (``ref_mean``, ``ref_max_share``, ``n``) over the whole
+    corpus, plus ``ref_sigma``, the sample standard deviation of the
+    per-slice mean cosines over ``n_slices`` deterministic slices
     (``id % n_slices``). σ estimates the natural batch-to-batch spread
-    of the statistic on THIS corpus at roughly batch granularity, which
-    is what a portable trigger must be calibrated against (a global
-    absolute delta tuned on one fixture false- or under-flags on
-    corpora with different natural spread). One corpus pass (the same
-    GEMM an index build already pays), ≤ ``n_slices × n_cells``
-    collected rows.
+    of the statistic on THIS corpus, which a portable trigger must be
+    calibrated against: a global delta tuned on one corpus false- or
+    under-flags on corpora with a different spread. One corpus pass.
 
     When ``id_col`` is absent the reference degrades to a single slice
-    (σ = NaN) and :func:`ivf_drift_flag` falls back to the documented
-    global delta."""
-    from pyspark.sql import types as T
-
-    C = centroids
-    sliced = id_col in emb.columns
-    schema = T.StructType([
-        T.StructField("slice", T.IntegerType()),
-        T.StructField("cell", T.IntegerType()),
-        T.StructField("adot", T.DoubleType()),
-    ])
-
-    def kern(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            norms = np.linalg.norm(V, axis=1)
-            nz = norms > 0
-            if not nz.any():
-                continue
-            V = V[nz] / norms[nz, None]
-            sl = (
-                (pdf[id_col].to_numpy()[nz] % n_slices).astype(np.int32)
-                if sliced else np.zeros(int(nz.sum()), dtype=np.int32)
-            )
-            D = V @ C.T
-            cell = D.argmax(axis=1)
-            yield pd.DataFrame({
-                "slice": sl,
-                "cell": cell.astype(np.int32),
-                "adot": D[np.arange(len(V)), cell],
-            })
-
-    cols = [id_col, vec_col] if sliced else [vec_col]
-    rows = (
-        finite_vectors(emb.select(*cols), vec_col, dim)
-        .mapInPandas(kern, schema)
-        .groupBy("slice", "cell")
-        .agg(F.count("*").alias("n"), F.sum("adot").alias("s"))
-        .collect()  # bounded: <= n_slices * n_cells rows
-    )
-    n_tot = int(sum(r.n for r in rows))
-    if n_tot == 0:
-        return {"ref_mean": float("nan"), "ref_sigma": float("nan"),
-                "ref_max_share": float("nan"), "n": 0,
-                "n_slices": n_slices}
-    ref_mean = float(sum(r.s for r in rows)) / n_tot
-    by_cell: dict[int, int] = {}
-    by_slice: dict[int, tuple[float, int]] = {}
+    (σ = NaN) and :func:`ivf_drift_flag` falls back to the global
+    delta."""
+    rows = _drift_rows(emb, centroids, vec_col, dim,
+                       id_col if id_col in emb.columns else None, n_slices)
+    ref_mean, ref_max_share, n_tot = _drift_summary(rows)
+    by_slice: dict[int, list] = {}
     for r in rows:
-        by_cell[r.cell] = by_cell.get(r.cell, 0) + int(r.n)
-        s, n = by_slice.get(r.slice, (0.0, 0))
-        by_slice[r.slice] = (s + float(r.s), n + int(r.n))
-    slice_means = [s / n for s, n in by_slice.values() if n > 0]
+        by_slice.setdefault(r.slice, []).append(r)
+    slice_means = [sum(float(r.s) for r in g) / sum(int(r.n) for r in g)
+                   for g in by_slice.values()]
     sigma = (
         float(np.std(slice_means, ddof=1))
         if len(slice_means) >= 2 else float("nan")
@@ -1624,7 +1594,7 @@ def ivf_drift_reference(emb: DataFrame, centroids: np.ndarray, *,
     return {
         "ref_mean": ref_mean,
         "ref_sigma": sigma,
-        "ref_max_share": max(by_cell.values()) / n_tot,
+        "ref_max_share": ref_max_share,
         "n": n_tot,
         "n_slices": n_slices,
     }
@@ -1663,24 +1633,12 @@ def ivf_drift_check_batch(batch: DataFrame, index_path: str, *,
 def ivf_assign(emb: DataFrame, centroids: np.ndarray,
                id_col: str = "vec_id", vec_col: str = "embedding",
                dim: int | None = None) -> DataFrame:
-    """Assign every FINITE vector to its nearest centroid cell (max dot
-    product — vectors and centroids are unit-normalized). Vectorized numpy
-    per Arrow batch; centroids ride along as a task broadcast. Corrupt
-    vectors (NaN/Inf) are excluded — a NaN dot row makes argmax garbage
-    and would file the corrupt vector into an arbitrary cell (r8)."""
-    C = centroids
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vecs = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            cells = (vecs @ C.T).argmax(axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col], "cell": cells.astype(np.int64)})
-
-    return finite_vectors(emb.select(id_col, vec_col), vec_col, dim).mapInPandas(
-        assign, f"{id_col} long, cell long"
-    )
+    """``(id, cell)`` for every FINITE vector: :func:`ivf_assign_full`
+    over the id and vector columns alone."""
+    return ivf_assign_full(
+        emb.select(id_col, vec_col), centroids, vec_col, dim
+    ).select(F.col(id_col).cast("long").alias(id_col),
+             F.col("cell").cast("long").alias("cell"))
 
 
 # Centroids are a tiny model (n_cells × dim floats) that should be trained
@@ -1757,10 +1715,12 @@ def ivf_train_centroids(emb: DataFrame, n_cells: int = 16, seed: int = 42,
 def ivf_assign_full(emb: DataFrame, centroids: np.ndarray,
                     vec_col: str = "embedding",
                     dim: int | None = None) -> DataFrame:
-    """All input columns + their nearest-centroid ``cell`` (the index row
-    shape). Vectorized numpy per Arrow batch; other columns pass through.
-    Corrupt (non-finite) vectors are excluded — they must not be written
-    into the index (r8, same rule as :func:`ivf_assign`)."""
+    """All input columns + their nearest-centroid ``cell`` (max dot
+    product; vectors and centroids are unit-normalized), the index row
+    shape. Vectorized numpy per Arrow batch; the centroids ride along as
+    a task broadcast. Corrupt (non-finite) vectors are excluded: a NaN
+    dot row makes the argmax garbage and would file the vector into an
+    arbitrary cell of the index."""
     from pyspark.sql import types as T
 
     C = centroids
@@ -1768,16 +1728,13 @@ def ivf_assign_full(emb: DataFrame, centroids: np.ndarray,
         list(emb.schema.fields) + [T.StructField("cell", T.IntegerType())]
     )
 
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vecs = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            pdf = pdf.copy()
-            pdf["cell"] = (vecs @ C.T).argmax(axis=1).astype(np.int32)
-            yield pdf
+    def assign(pdf, X):
+        pdf = pdf.copy()
+        pdf["cell"] = _nearest_centroid(X, C)[0].astype(np.int32)
+        return pdf
 
-    return finite_vectors(emb, vec_col, dim).mapInPandas(assign, schema)
+    return finite_vectors(emb, vec_col, dim).mapInPandas(
+        _per_batch(assign, vec_col), schema)
 
 
 def ivf_build_index(emb: DataFrame, index_path: str, n_cells: int = 16,
@@ -1929,27 +1886,15 @@ def ivf_append(new_emb: DataFrame, index_path: str,
             vec_col=vec_col, dim=dim, int8_cols=int8_cols)
 
 
-#: Drift-detector FALLBACK threshold (r12, VERDICT r11 next #2; r13:
-#: demoted to fallback — the primary rule is the PER-INDEX ``3σ`` of
-#: :func:`ivf_drift_reference`, stored in the index manifest, which
-#: transports across dims/domains where this fixture-tuned constant
-#: would not). A batch is flagged for coarse-quantizer retrain when its
-#: mean assignment cosine drops more than the threshold below the
-#: reference corpus's value — i.e. when the FIXED quantizer stops
-#: fitting the arriving data.
-#: Margin measured on the fixture (PERF.md "IVF centroid drift"): an
-#: in-distribution control batch moves the mean by under
-#: +/-0.02 while an offset-and-renormalized shifted batch (alpha=2)
-#: drops it ~0.10-0.12 — the rule separates them with >2x margin on
-#: both sides. Occupancy concentration (max cell share, also returned
-#: by ivf_drift_stats) is deliberately NOT part of the per-batch flag:
-#: a topically-coherent batch legitimately lands in one cell (pinned in
-#: tests/test_operators.py — after a retrain absorbs a shifted mode,
-#: the mode's batches still concentrate at share 1.0 while fitting at
-#: cosine 0.90), and a single batch barely moves index-level occupancy
-#: anyway. Hot cells are an INDEX property handled by the measured
-#: compaction pair (compact_partition_scoped) and show up in the drift
-#: arm's reported shares/scan fractions, not in the trigger.
+#: Fallback retrain threshold of :func:`ivf_drift_flag`, used when the
+#: index records no per-index σ: a batch flags when its mean assignment
+#: cosine falls more than this below the reference's, i.e. when the
+#: fixed quantizer stops fitting the arriving data. On the fixture an
+#: in-distribution batch moves the mean by under ±0.02 and a shifted one
+#: (alpha=2) drops it by 0.10-0.12 (PERF.md "IVF centroid drift").
+#: Occupancy concentration (max cell share) is reported but never flags:
+#: a topically coherent batch legitimately lands in one cell, and hot
+#: cells are an index property that compaction handles.
 DRIFT_DOT_DELTA = 0.04
 
 
@@ -1957,72 +1902,23 @@ def ivf_drift_stats(batch: DataFrame, centroids: np.ndarray,
                     vec_col: str = "embedding",
                     dim: int | None = None) -> tuple[float, float, int]:
     """Centroid-drift statistics for a batch against FIXED centroids:
-    ``(mean assignment dot, max cell share, n eligible rows)``.
+    ``(mean assignment cosine, max cell share, n eligible rows)``, the
+    one-slice reduction of the aggregate :func:`ivf_drift_reference`
+    reduces over the training corpus.
 
-    This is the measurement that turns ``ivf_append``'s "periodic
-    retrain" caveat into a TRIGGER: at continuous-ingest scale the
-    operator's question is *when* to retrain, and the two cheap
-    per-batch statistics answer it — a distribution shift away from the
-    trained cells shows up as (a) the batch's vectors sitting farther
-    from their nearest centroid (mean assignment dot falls vs the
-    training-time corpus value) and (b) occupancy collapsing into few
-    cells (max cell share rises), which is also the mechanism by which
-    drift destroys the index: the hot cell grows until probing it is a
-    brute-force scan. Cost is one |batch| assignment pass (the same
-    GEMM ``ivf_append`` already pays) + an n_cells-row aggregate; the
-    only collect is n_cells rows.
+    They turn ``ivf_append``'s "periodic retrain" caveat into a
+    trigger: a distribution shift away from the trained cells shows up
+    as the batch's vectors sitting farther from their nearest centroid
+    (the mean falls below the training-time value) and as occupancy
+    collapsing into few cells (the max share rises), which is how drift
+    degrades the index into a brute-force scan of one hot cell. Cost is
+    one |batch| assignment pass and an n_cells-row collect.
 
-    The statistic is SCALE-INVARIANT (r12 hostile probe): rows are
-    L2-normalized before the centroid dot, so the mean is the mean
-    COSINE to the assigned centroid — one legal large-magnitude vector
-    (norm ~8000 in the hostile fixture) would otherwise inflate the
-    reference mean by orders of magnitude and flag every normal batch.
-    Zero-norm vectors carry no direction and are excluded from both the
-    count and the mean (matching the oracle's ``norm > 0`` term in
-    ``ivf_drift_check``).
-
-    Eligibility otherwise matches every other vector kernel
+    Rows are L2-normalized before the centroid dot, so the statistic is
+    scale-invariant; zero-norm rows are excluded from the count and the
+    mean. Eligibility otherwise matches every other vector kernel
     (:func:`finite_vectors` with the declared ``dim``)."""
-    from pyspark.sql import types as T
-
-    C = centroids
-    schema = T.StructType([
-        T.StructField("cell", T.IntegerType()),
-        T.StructField("adot", T.DoubleType()),
-    ])
-
-    def kern(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            norms = np.linalg.norm(V, axis=1)
-            nz = norms > 0
-            if not nz.any():
-                continue
-            V = V[nz] / norms[nz, None]
-            D = V @ C.T
-            cell = D.argmax(axis=1)
-            yield pd.DataFrame({
-                "cell": cell.astype(np.int32),
-                "adot": D[np.arange(len(V)), cell],
-            })
-
-    rows = (
-        finite_vectors(batch, vec_col, dim)
-        .mapInPandas(kern, schema)
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"), F.sum("adot").alias("s"))
-        .collect()  # bounded: <= n_cells rows
-    )
-    n_tot = int(sum(r.n for r in rows))
-    if n_tot == 0:
-        return float("nan"), float("nan"), 0
-    mean_dot = float(sum(r.s for r in rows)) / n_tot
-    max_share = max(int(r.n) for r in rows) / n_tot
-    return mean_dot, max_share, n_tot
+    return _drift_summary(_drift_rows(batch, centroids, vec_col, dim))
 
 
 def centroid_nullspace_axis(centroids) -> np.ndarray:
@@ -2060,10 +1956,10 @@ def shift_vectors(emb: DataFrame, alpha: float = 2.0,
     embedding-model update or domain change — vectors concentrate
     around a direction the coarse quantizer never trained on. Pass
     ``axis=centroid_nullspace_axis(C)`` for a shift that is guaranteed
-    unowned by the quantizer at any corpus scale (r16). Pure per-row
+    unowned by the quantizer at any corpus scale. Pure per-row
     numpy over Arrow batches; output schema equals the input's.
 
-    Zero-norm guard (r13 advisor): a vector equal to ``-alpha*u`` lands
+    Zero-norm guard: a vector equal to ``-alpha*u`` lands
     exactly on the origin after the offset, and dividing by its zero
     norm would emit a fabricated NaN row under the schema-equals-input
     contract — silently shrinking downstream eligible counts (the
@@ -2073,26 +1969,20 @@ def shift_vectors(emb: DataFrame, alpha: float = 2.0,
     keep the same base-row set."""
     fixed = None if axis is None else np.asarray(axis, dtype=np.float64)
 
-    def kern(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            u = (fixed if fixed is not None
-                 else np.ones(V.shape[1]) / np.sqrt(V.shape[1]))
-            W = V + alpha * u
-            norms = np.linalg.norm(W, axis=1)
-            ok = norms > 1e-12
-            W[ok] /= norms[ok, None]
-            W[~ok] = V[~ok]  # post-offset zero norm: pass through
-            pdf = pdf.copy()
-            pdf[vec_col] = [r.astype(np.float32) for r in W]
-            yield pdf
+    def kern(pdf, V):
+        u = (fixed if fixed is not None
+             else np.ones(V.shape[1]) / np.sqrt(V.shape[1]))
+        W = V + alpha * u
+        norms = np.linalg.norm(W, axis=1)
+        ok = norms > 1e-12
+        W[ok] /= norms[ok, None]
+        W[~ok] = V[~ok]  # post-offset zero norm: pass through
+        pdf = pdf.copy()
+        pdf[vec_col] = [r.astype(np.float32) for r in W]
+        return pdf
 
     clean = finite_vectors(emb, vec_col, dim)
-    return clean.mapInPandas(kern, clean.schema)
+    return clean.mapInPandas(_per_batch(kern, vec_col), clean.schema)
 
 
 def ivf_drift_flag(batch_stats: tuple[float, float, int],
@@ -2268,34 +2158,19 @@ def ivf_topk(emb: DataFrame, query_id: int, k: int = 10, n_cells: int = 16,
     their directories (plan-asserted in tests/test_plans.py).
     """
     centroids = ivf_train_centroids(
-        emb, n_cells=n_cells, cache_key=cache_key, dim=dim
+        emb, n_cells=n_cells, vec_col=vec_col, cache_key=cache_key, dim=dim
     )
     assigned = ivf_assign(emb, centroids, id_col, vec_col, dim=dim)
 
-    qrow = (
-        finite_vectors(emb, vec_col, dim)
-        .where(F.col(id_col) == query_id)
-        .select(vec_col)
-        .first()
-    )
-    if qrow is None:
-        # match knn_topk's contract: unknown query id -> empty result,
-        # not a NoneType crash (r7 review)
+    qrows = _query_vectors(emb, [query_id], id_col, vec_col, dim)
+    if not qrows:  # knn_topk's contract: an unknown query, no rows
         return _empty_topk(emb, id_col, "label")
-    qv = np.asarray(qrow[0], dtype=np.float64)
+    qv = np.asarray(qrows[0][1], dtype=np.float64)
     probe_cells = [int(c) for c in (centroids @ qv).argsort()[::-1][:nprobe]]
 
     cand_ids = assigned.where(F.col("cell").isin(probe_cells)).select(id_col)
     cands = emb.join(cand_ids, id_col).where(F.col(id_col) != query_id)
-    q = emb.where(F.col(id_col) == query_id).select(F.col(vec_col).alias("__qv"))
-    return (
-        cands.crossJoin(F.broadcast(q))
-        .select(id_col, "label",
-                F.round(dot_f64(F.col(vec_col), F.col("__qv")), 6).alias("cosine"))
-        .transform(_finite)
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return _exact_topk(cands, emb, query_id, k, id_col, "label", vec_col)
 
 
 # ------------------------------------------------- int8 storage quantization
@@ -2409,18 +2284,14 @@ def knn_join(emb: DataFrame, query_ids: list, k: int = 5,
 
     Returns (q_id, id_col, label_col, cosine), k rows per query.
     """
-    # eligibility applies to BOTH sides (r10 hostile-embeddings gate):
-    # a corrupt/wrong-dim QUERY vector would crash the closure-shipped
-    # GEMM matrix; such queries simply return no rows (no-answer)
+    # eligibility applies to BOTH sides: a corrupt/wrong-dim QUERY
+    # vector would crash the closure-shipped GEMM matrix; such queries
+    # simply return no rows (no-answer)
     src = finite_vectors(emb, vec_col, dim)
-    qrows = (
-        src.where(F.col(id_col).isin([int(q) for q in query_ids]))
-        .select(id_col, vec_col)
-        .collect()  # bounded: len(query_ids) rows by construction
-    )
+    qrows = _query_vectors(emb, query_ids, id_col, vec_col, dim)
     if not qrows:
         # fail fast and clearly — an empty query matrix would otherwise
-        # die deep in the executor GEMM with a shape error (r7 review)
+        # die deep in the executor GEMM with a shape error
         raise ValueError(
             f"knn_join: none of the {len(query_ids)} query_ids exist in "
             f"the corpus ({id_col})"
@@ -2436,28 +2307,22 @@ def knn_join(emb: DataFrame, query_ids: list, k: int = 5,
         f"{vec_col} array<float>",
     ])
 
-    def prune(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            sims = mat @ qmat.T  # (batch x Q) — one GEMM
-            ids = pdf[id_col].to_numpy()
-            parts = []
-            for j in range(len(qids)):
-                col = sims[:, j].copy()
-                col[ids == qids[j]] = -np.inf  # self-pair mask
-                top = np.argsort(-col, kind="stable")[:keep]
-                top = top[np.isfinite(col[top])]
-                sel = pdf.iloc[top][[id_col, label_col, vec_col]].copy()
-                sel.insert(0, "q_id", int(qids[j]))
-                parts.append(sel)
-            yield pd.concat(parts, ignore_index=True)
+    def prune(pdf, X):
+        sims = X @ qmat.T  # (batch x Q) — one GEMM
+        ids = pdf[id_col].to_numpy()
+        parts = []
+        for j in range(len(qids)):
+            col = sims[:, j].copy()
+            col[ids == qids[j]] = -np.inf  # self-pair mask
+            top = np.argsort(-col, kind="stable")[:keep]
+            top = top[np.isfinite(col[top])]
+            sel = pdf.iloc[top][[id_col, label_col, vec_col]].copy()
+            sel.insert(0, "q_id", int(qids[j]))
+            parts.append(sel)
+        return pd.concat(parts, ignore_index=True)
 
     cands = src.select(id_col, label_col, vec_col).mapInPandas(
-        prune, schema=out_fields
+        _per_batch(prune, vec_col), schema=out_fields
     )
     queries = (
         src.where(F.col(id_col).isin([int(q) for q in query_ids]))
@@ -2502,9 +2367,21 @@ def pq_train_codebooks(emb: DataFrame, m: int = 16, ksub: int = 32,
 
     Returns a ``(m, ksub, d//m)`` f64 array. With ``cache_key`` (a corpus
     identity, e.g. sf_dir) the trained books are cached per full
-    parameter tuple across calls, like :func:`ivf_train_centroids` —
-    repeat queries pay only the ADC scan, never the k-means (r7 review).
+    parameter tuple across calls, like :func:`ivf_train_centroids`, so
+    repeat queries pay only the ADC scan, never the k-means.
     """
+    return _train_codebooks(emb, None, m=m, ksub=ksub, sample_n=sample_n,
+                            iters=iters, seed=seed, id_col=id_col,
+                            vec_col=vec_col, cache_key=cache_key, dim=dim)
+
+
+def _train_codebooks(emb: DataFrame, centroids: np.ndarray | None, *,
+                     m: int, ksub: int, seed: int, id_col: str,
+                     vec_col: str, cache_key: str | None, dim: int | None,
+                     sample_n: int = 2048, iters: int = 25) -> np.ndarray:
+    """:func:`pq_train_codebooks`; with ``centroids``, on the sample's
+    residuals ``x − centroids[nearest cell]`` (residual IVF-PQ), computed
+    on the driver."""
     key = (
         (cache_key, m, ksub, sample_n, iters, seed, id_col, vec_col, dim)
         if cache_key is not None else None
@@ -2516,6 +2393,8 @@ def pq_train_codebooks(emb: DataFrame, m: int = 16, ksub: int = 32,
         .orderBy(id_col).limit(int(sample_n)).select(vec_col).collect()
     )
     x = np.array([r[0] for r in rows], dtype=np.float64)
+    if centroids is not None:
+        x = x - centroids[_nearest_centroid(x, centroids)[0]]
     d = x.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -2526,8 +2405,7 @@ def pq_train_codebooks(emb: DataFrame, m: int = 16, ksub: int = 32,
         sub = x[:, j * dsub:(j + 1) * dsub]
         cent = sub[rng.choice(len(sub), size=ksub, replace=False)].copy()
         for _ in range(iters):
-            d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
+            assign = _nearest_codeword(sub, cent)
             for c in range(ksub):
                 pts = sub[assign == c]
                 cent[c] = (
@@ -2538,6 +2416,22 @@ def pq_train_codebooks(emb: DataFrame, m: int = 16, ksub: int = 32,
     if key is not None:
         _PQ_BOOKS_CACHE[key] = books
     return books
+
+
+def _nearest_codeword(sub: np.ndarray, book: np.ndarray) -> np.ndarray:
+    """Each row's nearest codeword (squared L2) in one PQ subspace."""
+    return ((sub[:, None, :] - book[None, :, :]) ** 2).sum(axis=2).argmin(
+        axis=1)
+
+
+def _pq_codes(X: np.ndarray, books: np.ndarray) -> list:
+    """Each row's ``m`` one-byte codes: its nearest codeword per
+    subspace."""
+    m, _, dsub = books.shape
+    return [c.tolist() for c in np.stack([
+        _nearest_codeword(X[:, j * dsub:(j + 1) * dsub], books[j])
+        for j in range(m)
+    ], axis=1).astype(np.int8)]
 
 
 def _check_ksub_int8(ksub: int, where: str) -> None:
@@ -2559,38 +2453,25 @@ def pq_encode(emb: DataFrame, codebooks: np.ndarray,
               id_col: str = "vec_id", vec_col: str = "embedding",
               label_col: str = "label",
               dim: int | None = None) -> DataFrame:
-    """Encode each vector to ``m`` one-byte centroid ids — the PQ code
-    column. 64-dim float32 (256 B) → 16 B/vector: at 100 TB of embeddings
-    the code table is the thing that fits in cluster memory and the thing
-    every ADC scan reads instead of the raw vectors.
-
-    One vectorized ``mapInPandas`` pass (argmin over ksub per subspace,
-    BLAS-friendly); no shuffle — codes append to the row.
-    """
-    m, ksub, dsub = codebooks.shape
-    _check_ksub_int8(ksub, "pq_encode")
+    """``(id, label, pq_code)``: each vector encoded to ``m`` one-byte
+    centroid ids. 64-dim float32 (256 B) → 16 B/vector: at 100 TB of
+    embeddings the code table is the thing that fits in cluster memory
+    and the thing every ADC scan reads instead of the raw vectors. One
+    ``mapInPandas`` pass, no shuffle; the vector does not ride back
+    from the worker."""
+    _check_ksub_int8(codebooks.shape[1], "pq_encode")
     books = codebooks.copy()
 
-    def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            codes = np.empty((len(x), m), dtype=np.int8)
-            for j in range(m):
-                sub = x[:, j * dsub:(j + 1) * dsub]
-                d2 = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d2.argmin(axis=1).astype(np.int8)
-            out = pdf[[id_col, label_col]].copy()
-            out["pq_code"] = [c.tolist() for c in codes]
-            yield out
+    def encode(pdf, X):
+        out = pdf[[id_col, label_col]].copy()
+        out["pq_code"] = _pq_codes(X, books)
+        return out
 
     return finite_vectors(
         emb.select(id_col, label_col, vec_col), vec_col, dim
     ).mapInPandas(
-        encode, schema=f"{id_col} long, {label_col} int, pq_code array<tinyint>"
+        _per_batch(encode, vec_col),
+        schema=f"{id_col} long, {label_col} int, pq_code array<tinyint>",
     )
 
 
@@ -2685,20 +2566,8 @@ def pq_topk_reranked(emb: DataFrame, query_id: int, k: int = 10,
         codes, books, qv, k=shortlist + 1, id_col=id_col,
         label_col=label_col
     ).where(F.col(id_col) != query_id).select(id_col).limit(shortlist)
-    q = src.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__qv")
-    )
-    return (
-        src.join(F.broadcast(short), id_col)
-        .crossJoin(F.broadcast(q))
-        .select(
-            id_col, label_col,
-            F.round(dot_f64(F.col(vec_col), F.col("__qv")), 6).alias("cosine"),
-        )
-        .transform(_finite)
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return _exact_topk(src.join(F.broadcast(short), id_col), src, query_id,
+                       k, id_col, label_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2711,86 +2580,40 @@ def pq_encode_rows(df: DataFrame, codebooks: np.ndarray,
                    dim: int | None = None,
                    centroids: np.ndarray | None = None) -> DataFrame:
     """All input columns + the PQ ``pq_code`` column (m one-byte
-    centroid ids) — the row shape the materialized IVF+PQ index stores.
-    Unlike :func:`pq_encode` (which projects down to id/label/code for
-    the in-memory ADC path), this keeps every column so cell
-    assignment, metadata and the float vector ride the same row into
-    the partitioned write. One vectorized ``mapInPandas`` pass, no
-    shuffle; corrupt (non-finite) vectors are excluded — same index
-    hygiene as :func:`ivf_assign_full`.
+    centroid ids), the row shape the materialized IVF+PQ index stores:
+    cell, metadata and the float vector ride the same row into the
+    partitioned write. :func:`pq_encode` projects down to id, label and
+    code instead. Corrupt (non-finite) vectors are excluded, the same
+    index hygiene as :func:`ivf_assign_full`.
 
-    ``centroids`` (r14, the RESIDUAL variant — FAISS's actual IVFPQ
-    formulation): when given, each row encodes ``x − centroids[cell]``
-    instead of ``x`` (requires the ``cell`` column, i.e. run after
-    :func:`ivf_assign_full`). Residuals concentrate around the origin
-    once the coarse quantizer explains the between-cell variance, so
-    the same 16-byte budget spends its precision on the within-cell
-    detail that actually ranks neighbors."""
+    ``centroids`` (the RESIDUAL variant, FAISS's IVFPQ formulation):
+    each row encodes ``x − centroids[cell]`` instead of ``x`` (requires
+    the ``cell`` column, i.e. run after :func:`ivf_assign_full`).
+    Residuals concentrate around the origin once the coarse quantizer
+    explains the between-cell variance, so the same 16-byte budget
+    spends its precision on the within-cell detail that ranks
+    neighbors."""
     from pyspark.sql import types as T
 
     books = codebooks.copy()
     C = None if centroids is None else np.asarray(centroids,
                                                   dtype=np.float64)
-    m, ksub, dsub = books.shape
-    _check_ksub_int8(ksub, "pq_encode_rows")
+    _check_ksub_int8(books.shape[1], "pq_encode_rows")
     schema = T.StructType(
         list(df.schema.fields)
         + [T.StructField("pq_code", T.ArrayType(T.ByteType()))]
     )
 
-    def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            if C is not None:
-                x = x - C[pdf["cell"].to_numpy()]
-            codes = np.empty((len(x), m), dtype=np.int8)
-            for j in range(m):
-                sub = x[:, j * dsub:(j + 1) * dsub]
-                d2 = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(
-                    axis=2
-                )
-                codes[:, j] = d2.argmin(axis=1).astype(np.int8)
-            pdf = pdf.copy()
-            pdf["pq_code"] = [c.tolist() for c in codes]
-            yield pdf
+    def encode(pdf, X):
+        if C is not None:
+            X = X - C[pdf["cell"].to_numpy()]
+        pdf = pdf.copy()
+        pdf["pq_code"] = _pq_codes(X, books)
+        return pdf
 
     return finite_vectors(df, vec_col, dim).mapInPandas(
-        encode, schema=schema
+        _per_batch(encode, vec_col), schema=schema
     )
-
-
-def _residual_df(assigned: DataFrame, centroids: np.ndarray,
-                 vec_col: str) -> DataFrame:
-    """``assigned`` (rows carrying ``cell``) with ``vec_col`` REPLACED
-    by the residual ``x − centroids[cell]`` — the training input for
-    residual-PQ codebooks. Same Arrow-batched shape as the encoders."""
-    from pyspark.sql import types as T
-
-    C = np.asarray(centroids, dtype=np.float64)
-    schema = T.StructType([
-        T.StructField(f.name,
-                      T.ArrayType(T.DoubleType()) if f.name == vec_col
-                      else f.dataType)
-        for f in assigned.schema.fields
-    ])
-
-    def kern(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            r = x - C[pdf["cell"].to_numpy()]
-            pdf = pdf.copy()
-            pdf[vec_col] = [row.tolist() for row in r]
-            yield pdf
-
-    return assigned.mapInPandas(kern, schema=schema)
 
 
 def ivfpq_build_index(emb: DataFrame, index_path: str, *,
@@ -2864,52 +2687,43 @@ def ivfpq_manifest(emb: DataFrame, centroids: np.ndarray,
                             dim=dim, n_cells=n_cells, seed=seed,
                             id_col=id_col, vec_col=vec_col,
                             drift_reference=drift_reference)
-    manifest["kind"] = "ivfpq"
-    manifest["m"] = m if m is not None else int(books.shape[0])
-    manifest["ksub"] = ksub if ksub is not None else int(books.shape[1])
-    manifest["codebooks"] = books.tolist()
+    manifest.update(
+        kind="ivfpq", m=m if m is not None else int(books.shape[0]),
+        ksub=ksub if ksub is not None else int(books.shape[1]),
+        codebooks=books.tolist())
     return manifest
 
 
-def _ivfpq_rows(emb: DataFrame, *, n_cells: int = 16, m: int = 16,
-                ksub: int = 32, seed: int = 42, id_col: str = "vec_id",
+def _ivfpq_rows(emb: DataFrame, *, m: int = 16, ksub: int = 32,
+                seed: int = 42, id_col: str = "vec_id",
                 vec_col: str = "embedding", dim: int | None = None,
-                residual: bool = False, drift_reference: bool = True,
-                cache_key: str | None = None,
-                layout_parts: int | None = None, model: dict | None = None,
-                **_) -> tuple[DataFrame, dict]:
-    """The IVF-PQ family's rows and manifest for ``emb``: every input
-    column plus its ``cell`` and 16-byte ``pq_code``. ``model`` and
-    ``layout_parts`` work as in :func:`_ivf_rows`; training fits the
-    coarse centroids, then the codebooks (on residuals when
-    ``residual``, FAISS's formulation, under a ``cache_key`` of their
-    own so they never collide with the raw-vector books)."""
+                residual: bool = False, cache_key: str | None = None,
+                model: dict | None = None, **config) -> tuple[DataFrame, dict]:
+    """The IVF-PQ family's rows and manifest for ``emb``: the coarse
+    half is :func:`_ivf_rows`' (``model``, ``layout_parts`` and the
+    other ``config`` work as there), and every row gains its 16-byte
+    ``pq_code``. Training adds the codebooks, fit on the id-ordered
+    sample (on its residuals when ``residual``, FAISS's formulation,
+    under a ``cache_key`` of their own so they never collide with the
+    raw-vector books)."""
     if model is None:
         _check_ksub_int8(ksub, "ivfpq index build")
-        if layout_parts:
-            emb = emb.repartition(layout_parts, id_col).sortWithinPartitions(
-                id_col)
-        C = ivf_train_centroids(emb, n_cells=n_cells, seed=seed,
-                                vec_col=vec_col, cache_key=cache_key, dim=dim)
-        books_src, books_key = emb, cache_key
-        if residual:
-            books_src = _residual_df(ivf_assign_full(emb, C, vec_col, dim=dim),
-                                     C, vec_col)
-            books_key = None if cache_key is None else f"{cache_key}|res"
-        books = pq_train_codebooks(books_src, m=m, ksub=ksub, seed=seed,
-                                   id_col=id_col, vec_col=vec_col,
-                                   cache_key=books_key, dim=dim)
-        model = ivfpq_manifest(emb, C, books, dim=dim, n_cells=n_cells, m=m,
-                               ksub=ksub, seed=seed, id_col=id_col,
-                               vec_col=vec_col, drift_reference=drift_reference)
-        model["residual"] = bool(residual)
-    C = np.asarray(model["centroids"], dtype=np.float64)
-    rows = pq_encode_rows(
-        ivf_assign_full(emb, C, vec_col, dim=dim),
-        np.asarray(model["codebooks"], dtype=np.float64), vec_col, dim=dim,
-        centroids=C if model.get("residual", False) else None,
-    )
-    return rows, model
+    rows, out = _ivf_rows(emb, seed=seed, id_col=id_col, vec_col=vec_col,
+                          dim=dim, cache_key=cache_key, model=model, **config)
+    C = np.asarray(out["centroids"], dtype=np.float64)
+    if model is None:
+        del out["int8_cols"]
+        res_key = None if cache_key is None else f"{cache_key}|res"
+        books = _train_codebooks(
+            emb, C if residual else None, m=m, ksub=ksub, seed=seed,
+            id_col=id_col, vec_col=vec_col, dim=dim,
+            cache_key=res_key if residual else cache_key)
+        out.update(kind="ivfpq", m=m, ksub=ksub, codebooks=books.tolist(),
+                   residual=bool(residual))
+    return pq_encode_rows(
+        rows, np.asarray(out["codebooks"], dtype=np.float64), vec_col,
+        dim=dim, centroids=C if out.get("residual", False) else None,
+    ), out
 
 
 def ivfpq_append(new_emb: DataFrame, index_path: str, *,
@@ -3038,19 +2852,28 @@ class _Family(NamedTuple):
     #   -> (candidates, exact source, screen or None); see _probe
     probe: Callable
     needs: tuple  # config a probe or append cannot do without
+    # what ann_index_verify checks beyond the columns and range above
+    dup_key: tuple = ("id_col",)  # one index row per key
+    dup_note: str | None = None  # why duplicates of that key are benign
+    int8_store: bool = False  # an INT8 store at the root, per `quantized`
+    codes: tuple = ()  # (code column, length key, value-range key)
 
 
 _FAMILIES = {
     "lsh": _Family("table", ("table", "bucket"), frozenset({"table", "bucket"}),
                    ("table", "bucket", "id_col"), "n_tables", _lsh_rows,
-                   _lsh_probe, ("dim",)),
+                   _lsh_probe, ("dim",), dup_key=("table", "id_col"),
+                   dup_note="postings duplicates are benign (probes "
+                            "dropDuplicates) but compaction-worthy",
+                   int8_store=True),
     "ivf": _Family("cell", ("cell", "id_col"),
                    frozenset({"cell", "qvec", "scale"}),
                    ("cell", "id_col", "vec_col"), "n_cells", _ivf_rows,
                    _ivf_probe, ("centroids",)),
     "ivfpq": _Family("cell", ("cell", "id_col"), frozenset({"cell", "pq_code"}),
                      ("cell", "id_col", "vec_col", "pq_code"), "n_cells",
-                     _ivfpq_rows, _ivfpq_probe, ("centroids", "codebooks")),
+                     _ivfpq_rows, _ivfpq_probe, ("centroids", "codebooks"),
+                     codes=("pq_code", "m", "ksub")),
 }
 #: the manifest keys an explicit probe or append parameter must match
 _CHECKED_KEYS = ("dim", "id_col", "vec_col", "seed", "bits", "n_tables",
@@ -3918,9 +3741,10 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
     - sidecars: the LSH INT8 store's presence matches the manifest's
       ``quantized`` flag; centroid/codebook sidecar files load.
 
-    Deep checks (full scans, opt-in): duplicate ids per (table,) key —
-    LSH postings legitimately hold one row per table, so the dup check
-    keys on the kind; row count reported.
+    Deep checks (full scans, opt-in): duplicate rows per the family's
+    ``dup_key`` (LSH postings legitimately hold one row per table, so
+    theirs is ``(table, id)``); the code value range (ivfpq); the LSH
+    postings ids all present in the INT8 store; row count reported.
 
     Returns ``{"ok": bool, "kind", "epoch", "problems": [...],
     "checks": {...}}`` — ``ok`` is False iff ``problems`` is non-empty;
@@ -4023,45 +3847,45 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
                     problems.append(
                         f"sampled vector length {len(vec)} != manifest "
                         f"dim {dim}")
-                if "pq_code" in need:
-                    m = manifest.get("m")
-                    code = sample[0]["pq_code"]
-                    if m is not None and code is not None \
-                            and len(code) != int(m):
+                if fam.codes:
+                    code_col, len_key, _ = fam.codes
+                    n_codes = manifest.get(len_key)
+                    code = sample[0][code_col]
+                    if n_codes is not None and code is not None \
+                            and len(code) != int(n_codes):
                         problems.append(
-                            f"sampled pq_code length {len(code)} != "
-                            f"manifest m {m}")
+                            f"sampled {code_col} length {len(code)} != "
+                            f"manifest {len_key} {n_codes}")
             if deep:
                 checks["n_rows"] = df.count()
-                key = ["table", id_col] if kind == "lsh" else [id_col]
-                dups = checks["n_rows"] - df.select(*key).distinct().count()
+                dups = checks["n_rows"] - df.select(
+                    *_cols(manifest, fam.dup_key)).distinct().count()
                 checks["duplicate_rows"] = dups
-                if kind == "ivfpq" and manifest.get("ksub") is not None:
+                if fam.codes and manifest.get(fam.codes[2]) is not None:
                     # full scan of the code column only (16 B/row):
                     # every persisted centroid id must sit in
                     # [0, ksub) — out-of-range codes mean int8
                     # wraparound or codebook mismatch and a silently
                     # mis-ranked ADC screen (pairs with the ksub<=128
                     # encode guard)
+                    code_col, _, range_key = fam.codes
                     lo, hi = df.agg(
-                        F.min(F.array_min("pq_code")),
-                        F.max(F.array_max("pq_code")),
+                        F.min(F.array_min(code_col)),
+                        F.max(F.array_max(code_col)),
                     ).first()
-                    checks["pq_code_range"] = [lo, hi]
-                    ks = int(manifest["ksub"])
+                    checks[f"{code_col}_range"] = [lo, hi]
+                    ks = int(manifest[range_key])
                     if lo is not None and (int(lo) < 0 or int(hi) >= ks):
                         problems.append(
-                            f"pq_code values span [{lo}, {hi}] — outside "
-                            f"[0, ksub={ks}); codes corrupt or encoded "
+                            f"{code_col} values span [{lo}, {hi}] — outside "
+                            f"[0, {range_key}={ks}); codes corrupt or encoded "
                             "against a different codebook")
                 # duplicates are EXPECTED under at-least-once plain
-                # appends; report, flag only for the postings store
-                # where probe dedup assumes (table,bucket,id) identity
-                if kind == "lsh" and dups:
-                    checks["note"] = (
-                        "postings duplicates are benign (probes "
-                        "dropDuplicates) but compaction-worthy")
-                if kind == "lsh" and _quantized_store_exists(spark, root):
+                # appends; reported, and noted where the family says
+                # why they are benign
+                if fam.dup_note and dups:
+                    checks["note"] = fam.dup_note
+                if fam.int8_store and _quantized_store_exists(spark, root):
                     # postings/store id consistency: an id in the
                     # postings but absent from the INT8 store is
                     # silently DROPPED by the screen's semi-join — a
@@ -4083,7 +3907,7 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
                             "them from every shortlist; re-append or "
                             "rebuild to restore store consistency")
 
-    if kind == "lsh":
+    if fam.int8_store:
         has_q = _quantized_store_exists(spark, root)
         checks["quantized_store"] = has_q
         if bool(manifest.get("quantized", False)) != has_q:

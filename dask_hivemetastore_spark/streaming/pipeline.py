@@ -75,28 +75,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import events_ts_is_long
 
     ensure_runtime_confs(spark)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = _file_stream(spark, sf_dir, "events")
     ts_expr = (
         F.timestamp_micros(F.expr("ts div 1000"))
-        if events_ts_is_long(batch)
+        if events_ts_is_long(raw)
         else F.col("ts").cast("timestamp")
     )
-    # glob path on purpose: for a non-glob path FileStreamSource force-sets
-    # basePath to the (file) path itself, which partition discovery rejects;
-    # a glob keeps our explicit directory basePath in effect
-    raw = spark.readStream.schema(batch.schema).option("basePath", sf_dir)
-    # Micro-batch chunking knob (r10): with it unset, a finite fixture
-    # drains in ONE availableNow batch and the multi-batch state machine
-    # (watermark advancement, state carry, late-row eviction) never runs.
-    # tests/test_stream_batching.py splits events.parquet into K part
-    # files and sets this to 1, driving every registered streaming key
-    # through real micro-batch boundaries — the production shape, where
-    # data arrives incrementally. Semantics must be boundary-invariant
-    # (that is what the gate asserts), so the knob is safe to expose.
-    mft = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
-    if mft:
-        raw = raw.option("maxFilesPerTrigger", int(mft))
-    raw = raw.parquet(f"{sf_dir}/events.parque[t]")
     return raw.select(
         "event_id",
         ts_expr.alias("ts"),
@@ -105,6 +89,42 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         "props",
     )
+
+
+def _file_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-source stream over ``{sf_dir}/{table}.parquet``. Streaming
+    file sources need a user-supplied schema, so it is captured once
+    from a batch read (a driver-side footer peek).
+
+    ``SPARK_GRAFT_STREAM_MAX_FILES`` sets ``maxFilesPerTrigger``. Unset,
+    a finite fixture drains in ONE availableNow batch and the
+    multi-batch state machine (watermark advancement, state carry,
+    late-row eviction) never runs; tests/test_stream_batching.py splits
+    the table into K part files and sets it to 1, driving the streaming
+    keys through real micro-batch boundaries, the shape of incremental
+    arrival. Semantics must be boundary-invariant (what that gate
+    asserts), so the knob is safe to expose."""
+    raw = spark.readStream.schema(
+        spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    ).option("basePath", sf_dir)
+    mft = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
+    if mft:
+        raw = raw.option("maxFilesPerTrigger", int(mft))
+    # glob path on purpose: for a non-glob path FileStreamSource force-sets
+    # basePath to the (file) path itself, which partition discovery rejects;
+    # a glob keeps our explicit directory basePath in effect
+    return raw.parquet(f"{sf_dir}/{table}.parque[t]")
+
+
+def _drain(writer, ckpt: str):
+    """Run a configured ``DataStreamWriter`` over its finite input to the
+    end (availableNow trigger, checkpoint at ``ckpt``), then stop it;
+    returns the stopped query."""
+    q = writer.option("checkpointLocation", ckpt).trigger(
+        availableNow=True).start()
+    q.awaitTermination()
+    q.stop()
+    return q
 
 
 def stream_shuffle_partitions(spark: SparkSession, *paths: str) -> int:
@@ -221,16 +241,8 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str,
     spark = stream_df.sparkSession
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     with scoped_shuffle_partitions(spark, state_partitions):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+        _drain(stream_df.writeStream.format("memory").queryName(name)
+               .outputMode(output_mode), ckpt)
     return spark.table(name)
 
 
@@ -623,18 +635,14 @@ def stream_filter_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionBy(date) on the sink makes the layer prunable."""
     out_dir = tempfile.mkdtemp(prefix="stream_sink_")
     ev = read_events_stream(spark, sf_dir)
-    q = (
+    _drain(
         ev.where(F.col("event_type") == "click")
         .select("event_id", "value")
         .writeStream.format("parquet")
         .option("path", f"{out_dir}/data")
-        .option("checkpointLocation", f"{out_dir}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        f"{out_dir}/ckpt",
     )
-    q.awaitTermination()
-    q.stop()
     return spark.read.parquet(f"{out_dir}/data")
 
 
@@ -942,15 +950,8 @@ def stream_foreach_batch_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame
         batch_df.write.mode("overwrite").parquet(f"{out_dir}/data")
 
     with scoped_shuffle_partitions(spark, _ev_parts(spark, sf_dir)):
-        q = (
-            agg.writeStream.foreachBatch(upsert)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{out_dir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+        _drain(agg.writeStream.foreachBatch(upsert).outputMode("complete"),
+               f"{out_dir}/ckpt")
     return spark.read.parquet(f"{out_dir}/data")
 
 
@@ -1037,13 +1038,6 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.ivf_manifest(emb, C, dim=_IVF_DIM, n_cells=16, seed=42),
     )
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    raw = spark.readStream.schema(batch_schema).option("basePath", sf_dir)
-    mft = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
-    if mft:
-        raw = raw.option("maxFilesPerTrigger", int(mft))
-    stream = raw.parquet(f"{sf_dir}/embeddings.parque[t]")
-
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
         # batch-id-keyed subdirectory + overwrite = replay-idempotent;
         # centroids resolved from the root manifest (path-only API)
@@ -1055,14 +1049,8 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="overwrite",
         )
 
-    q = (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
+    _drain(_file_stream(spark, sf_dir, "embeddings").writeStream
+           .foreachBatch(append_batch), f"{base}/ckpt")
 
     qrow = (
         similarity.finite_vectors(emb, "embedding", _IVF_DIM)
@@ -1134,27 +1122,14 @@ def stream_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 seed=42),
     )
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    raw = spark.readStream.schema(batch_schema).option("basePath", sf_dir)
-    mft = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
-    if mft:
-        raw = raw.option("maxFilesPerTrigger", int(mft))
-    stream = raw.parquet(f"{sf_dir}/embeddings.parque[t]")
-
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
         similarity.lsh_append(  # config from the root manifest
             batch_df, idx,
             subdir=f"ingest_batch={batch_id}", mode="overwrite",
         )
 
-    q = (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
+    _drain(_file_stream(spark, sf_dir, "embeddings").writeStream
+           .foreachBatch(append_batch), f"{base}/ckpt")
 
     lsh_ids = {
         r.vec_id
@@ -1234,26 +1209,13 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   drift_reference=False),
     )
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    raw = spark.readStream.schema(batch_schema).option("basePath", sf_dir)
-    mft = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
-    if mft:
-        raw = raw.option("maxFilesPerTrigger", int(mft))
-    stream = raw.parquet(f"{sf_dir}/embeddings.parque[t]")
-
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
         similarity.ivfpq_append(  # artifacts from the root manifest
             batch_df, f"{idx}/ingest_batch={batch_id}", mode="overwrite"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
+    _drain(_file_stream(spark, sf_dir, "embeddings").writeStream
+           .foreachBatch(append_batch), f"{base}/ckpt")
 
     qrow = (
         similarity.finite_vectors(emb, "embedding", _IVF_DIM)
@@ -1327,17 +1289,13 @@ def statestore_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="statestore_q_")
     ev = read_events_stream(spark, sf_dir)
     with scoped_shuffle_partitions(spark, _ev_parts(spark, sf_dir)):
-        q = (
+        _drain(
             ev.groupBy("event_type")
             .agg(F.count("*").alias("n_events"))
             .writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("update"),
+            ckpt,
         )
-        q.awaitTermination()
-        q.stop()
     state = read_query_state(spark, ckpt)
     return state.select(
         F.col("key.event_type").alias("event_type"),
@@ -1419,14 +1377,8 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     listener = _QCAccumulator()
     spark.streams.addListener(listener)
     try:
-        q = (
-            observed.writeStream.format("noop")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="stream_obs_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+        q = _drain(observed.writeStream.format("noop"),
+                   tempfile.mkdtemp(prefix="stream_obs_"))
         run_id = str(q.runId)
         # Listener delivery is async relative to awaitTermination(); the
         # terminated event is ordered AFTER every progress event, so wait

@@ -277,24 +277,6 @@ def test_raw_lsh_path_survives_corruption(spark, hostile_emb_dir):
         assert all(np.isfinite(r.cosine) for r in lsh), n_tables
 
 
-def test_arrow_knn_variant_identical_on_hostile_corpus(spark,
-                                                       hostile_emb_dir):
-    """The pre-armed Arrow/NumPy brute-force variant (r11) must equal the
-    JVM path row-for-row ON THE POISONED CORPUS too: its eligibility
-    filter runs before np.stack (a ragged/NaN batch would crash or poison
-    the GEMV), and the exact rescore pins values. This is the fallback's
-    license to ever be flipped in."""
-    from dask_hivemetastore_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{hostile_emb_dir}/embeddings.parquet")
-    jvm = [(r.vec_id, r.label, r.cosine) for r in
-           similarity.knn_topk(emb, query_id=0, k=10, dim=DIM).collect()]
-    arrow = [(r.vec_id, r.label, r.cosine) for r in
-             similarity.knn_topk_arrow(emb, query_id=0, k=10,
-                                       dim=DIM).collect()]
-    assert jvm == arrow
-
-
 def test_ivf_ingest_keys_on_hostile_corpus_properties(spark,
                                                       hostile_emb_dir):
     """The two r11 IVF ingest keys (knn_ivf_append_probe,

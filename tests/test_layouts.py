@@ -2132,6 +2132,24 @@ def test_ivfpq_residual_variant_exact_and_append_identical(spark, tmp_path):
     idx = str(tmp_path / "pq_res")
     ivfpq_build_index(emb, idx, n_cells=8, m=16, ksub=32, cache_key=ck,
                       dim=64, drift_reference=False, residual=True)
+    # the codebooks are pq_train_codebooks over the residuals of the
+    # first sample_n eligible ids against the manifest's centroids
+    from dask_hivemetastore_spark.operators.similarity import (
+        pq_train_codebooks,
+        read_index_manifest,
+    )
+    mf = read_index_manifest(spark, idx)
+    C = np.asarray(mf["centroids"], dtype=np.float64)
+    sample = (finite_vectors(emb, "embedding", 64).orderBy("vec_id")
+              .limit(2048).select("vec_id", "embedding").collect())
+    x = np.array([r.embedding for r in sample], dtype=np.float64)
+    res = x - C[(x @ C.T).argmax(axis=1)]
+    res_df = spark.createDataFrame(
+        [(r.vec_id, v.tolist()) for r, v in zip(sample, res)],
+        "vec_id long, embedding array<double>")
+    assert np.array_equal(
+        np.asarray(mf["codebooks"], dtype=np.float64),
+        pq_train_codebooks(res_df, m=16, ksub=32, sample_n=2048, dim=64))
     qv = np.asarray(
         finite_vectors(emb, "embedding", 64)
         .where(F.col("vec_id") == 0).select("embedding").first()[0],
