@@ -27,6 +27,9 @@ from __future__ import annotations
 import contextlib
 import json
 import math
+import re
+from functools import reduce
+from operator import or_
 from typing import Callable, NamedTuple
 
 import numpy as np
@@ -315,33 +318,26 @@ def similar_pairs(emb: DataFrame, threshold: float,
         F.col("ba") <= F.col("bb"),
     )
 
+    def unpack(rows):  # a packed block: its ids and its vector matrix
+        return (np.fromiter((r["i"] for r in rows), dtype=np.int64),
+                np.stack([np.asarray(r["v"], dtype=np.float64) for r in rows]))
+
     def screen(batches):
         for pdf in batches:
-            out_a: list[np.ndarray] = []
-            out_b: list[np.ndarray] = []
+            out_a = [np.empty(0, dtype=np.int64)]
+            out_b = [np.empty(0, dtype=np.int64)]
             for ba, ra, bb, rb in zip(pdf["ba"], pdf["ra"], pdf["bb"], pdf["rb"]):
-                ids_a = np.fromiter((r["i"] for r in ra), dtype=np.int64)
-                A = np.stack([np.asarray(r["v"], dtype=np.float64) for r in ra])
-                if ba == bb:
-                    ids_b, Bm = ids_a, A
-                else:
-                    ids_b = np.fromiter((r["i"] for r in rb), dtype=np.int64)
-                    Bm = np.stack([np.asarray(r["v"], dtype=np.float64) for r in rb])
-                sims = A @ Bm.T
-                ai, bj = np.nonzero(sims >= threshold - margin)
+                ids_a, A = unpack(ra)
+                ids_b, Bm = (ids_a, A) if ba == bb else unpack(rb)
+                ai, bj = np.nonzero(A @ Bm.T >= threshold - margin)
                 ia, ib = ids_a[ai], ids_b[bj]
-                if ba == bb:
+                if ba == bb:  # one triangle of the tile, no self pairs
                     keep = ia < ib
                     ia, ib = ia[keep], ib[keep]
-                    out_a.append(ia)
-                    out_b.append(ib)
-                else:
-                    out_a.append(np.minimum(ia, ib))
-                    out_b.append(np.maximum(ia, ib))
-            yield pd.DataFrame({
-                "id_a": np.concatenate(out_a) if out_a else np.array([], dtype=np.int64),
-                "id_b": np.concatenate(out_b) if out_b else np.array([], dtype=np.int64),
-            })
+                out_a.append(np.minimum(ia, ib))
+                out_b.append(np.maximum(ia, ib))
+            yield pd.DataFrame({"id_a": np.concatenate(out_a),
+                                "id_b": np.concatenate(out_b)})
 
     cands = tiles.mapInPandas(screen, "id_a long, id_b long")
     a = src.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
@@ -438,9 +434,6 @@ def lsh_topk(emb: DataFrame, query_id: int, k: int = 10, bits: int = 8,
     silently EMPTY top-k where the old code failed loudly in the matmul.
     The model dimension is table metadata the caller always has.
     """
-    from functools import reduce
-    from operator import or_
-
     buckets = lsh_bucket_ids(emb, dim=dim, bits=bits, id_col=id_col,
                              vec_col=vec_col, n_tables=n_tables)
     with_b = emb.join(buckets, id_col)
@@ -570,16 +563,8 @@ def lsh_manifest(*, dim: int, bits: int = 8, n_tables: int = 16,
     probes and ``ann_index_compact`` go through
     :func:`_read_index_root`, which handles the conflicting partition
     depths plain ``spark.read.parquet`` rejects.)"""
-    return {
-        "kind": "lsh",
-        "dim": dim,
-        "bits": bits,
-        "n_tables": n_tables,
-        "seed": seed,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "quantized": quantized,
-    }
+    return dict(kind="lsh", dim=dim, bits=bits, n_tables=n_tables, seed=seed,
+                id_col=id_col, vec_col=vec_col, quantized=quantized)
 
 
 def _lsh_postings(emb: DataFrame, *, dim: int, bits: int, n_tables: int,
@@ -857,9 +842,6 @@ def _lsh_probe(spark, index_path: str, root: DataFrame, queries: list,
     ``(q_id, id)`` postings of each query's probed buckets, the corpus
     rows as the exact source, and the screen on the INT8 store's codes
     (None when the index has no store or ``rescore="float"``)."""
-    from functools import reduce
-    from operator import or_
-
     dim, id_col, bits = config["dim"], config["id_col"], config.get("bits", 8)
     n_tables = config.get("n_tables", 16)
     planes = _hyperplanes(dim, bits, seed=config.get("seed", 42),
@@ -922,26 +904,118 @@ _MANIFEST_DIR = "_index_manifest"
 _CENTROID_SIDECAR_DIR = "_index_manifest_centroids"
 _CODEBOOK_SIDECAR_DIR = "_index_manifest_codebooks"
 _APPEND_LOG_DIR = "_append_log"
-# Manifest swap files: dot-prefixed so the
-# text-source reader (which lists the _index_manifest dir) never sees
-# them — only `manifest.json` is a visible file.
+# What a manifest swap or a compact or rebuild leaves while it runs. All
+# are hidden from Spark scans (dot- or underscore-prefixed, or outside the
+# root) and from the text-source manifest reader (dot-prefixed).
 _MANIFEST_TMP = ".manifest.json.tmp"
 _MANIFEST_PREV = ".manifest.json.prev"
-# Maintenance swap sentinels: underscore-prefixed FILES at the index
-# root, invisible to Spark scans.
 _TOMB_STAGED_SENTINEL = "_tomb_staged.json"
 _TOMB_SWAPPED_SENTINEL = "_tomb_swapped.json"
-# Maintenance mutual-exclusion lock: a
-# root-level sentinel FILE created atomically (FileSystem.createNewFile
-# — create-if-absent is atomic on HDFS and local FS; S3A approximates
-# it, which is the same caveat every lock-file scheme carries there)
-# by ann_index_compact / ann_index_rebuild on entry and removed on
-# exit, so two maintainers racing each other fail LOUDLY at acquisition
-# instead of interleaving tombstone renames. A crash leaves the lock
-# behind; ann_index_recover clears it (recovery presumes no live
-# maintainer — the same assumption its tombstone restoration already
-# makes).
 _MAINT_LOCK = "_maint.lock"
+#: staging dirs a maintenance pass writes next to the index root
+#: (``{root}<suffix>``): each op's data stage and the INT8 store's stage
+_STAGE_DIRS = {"compact": "__compact_stage", "rebuild": "__rebuild_stage",
+               "int8_store": "__compact_qstage"}
+
+
+class _Leftover(NamedTuple):
+    """An artifact a crashed compact, rebuild or manifest swap leaves."""
+
+    where: str  # the _State field holding it ("dirs" match by name prefix)
+    name: str
+    # what ann_index_verify reports; {names}, {name}, {root} and
+    # {serving} are filled in
+    problem: str
+    refuses: bool  # the compact and rebuild pre-flight refuses it
+    # what ann_index_recover does: "roll" the swap back or forward,
+    # "heal" the manifest swap, or "drop" it, counted under ``counted``
+    recover: str
+    counted: str | None = None
+
+
+_CRASHED = "crashed compact or rebuild; run ann_index_recover"
+# a data dir the swap renamed aside: its original bytes, so a roll-back
+# is lossless wherever the pass crashed
+_TOMBSTONES = _Leftover("dirs", "_tomb_", "leftover tombstones {names} — "
+                        + _CRASHED, True, "roll")
+_LEFTOVERS = (
+    _TOMBSTONES,
+    # written once tombstoning completes: the staged names (what a
+    # roll-back deletes), the marker snapshot, the pre-swap epoch, the op
+    _Leftover("files", _TOMB_STAGED_SENTINEL,
+              "leftover swap sentinel {name} — " + _CRASHED, True, "drop"),
+    # written after the commit: the pass rolls forward
+    _Leftover("files", _TOMB_SWAPPED_SENTINEL,
+              "leftover swap sentinel {name} — " + _CRASHED, True, "drop"),
+    # a pass's staged rewrite; the next pass of that op overwrites it
+    *(_Leftover("stage", suffix, "leftover staging dir {root}{name}", False,
+                "drop", "staging_removed")
+      for suffix in _STAGE_DIRS.values()),
+    # held by a live compact or rebuild, or left by a crashed one. Taking
+    # it is what refuses a second maintainer (_maintenance), and
+    # recovery presumes no live maintainer, as restoring tombstones does
+    _Leftover("files", _MAINT_LOCK,
+              "maintenance lock {name} held — a compact/rebuild is live, "
+              "or one crashed (run ann_index_recover if no maintainer is "
+              "running)", False, "drop", "lock_cleared"),
+    # the manifest being written: uncommitted unless it is the only copy
+    _Leftover("manifest", _MANIFEST_TMP,
+              "leftover manifest temp {name} — interrupted manifest write; "
+              "run ann_index_recover", False, "heal"),
+    # the manifest being replaced: readers fall back to it meanwhile
+    _Leftover("manifest", _MANIFEST_PREV,
+              "leftover manifest backup {name}{serving} — crashed manifest "
+              "swap; run ann_index_recover", False, "heal"),
+)
+
+
+class _State(NamedTuple):
+    """What an index root holds, as one :func:`_index_state` read it:
+    ``{name: Path}`` per place, in listing order."""
+
+    root: str
+    dirs: dict  # the dirs under the root
+    files: dict  # the files under the root
+    manifest: dict  # the files in _MANIFEST_DIR
+    stage: dict  # the stage dirs next to the root, by suffix
+
+    @classmethod
+    def listed(cls, fs, JPath, root: str) -> "_State":
+        """``root``'s own listing (``root`` must exist)."""
+        sts = fs.listStatus(JPath(root))
+        return cls(root, *({s.getPath().getName(): s.getPath() for s in sts
+                            if s.isDirectory() == is_dir}
+                           for is_dir in (True, False)), {}, {})
+
+    def data(self, prefixes) -> list:
+        """The Paths of the dirs whose names start with ``prefixes``."""
+        return [p for n, p in self.dirs.items() if n.startswith(prefixes)]
+
+    def found(self, art: _Leftover) -> list:
+        """The names of ``art`` present: every tombstone, sorted, or
+        ``art.name`` alone."""
+        held = getattr(self, art.where)
+        if art.where == "dirs":
+            return sorted(n for n in held if n.startswith(art.name))
+        return [art.name] if art.name in held else []
+
+
+def _index_state(fs, JPath, root: str) -> _State:
+    """One read of ``root``: a listing of the root and one of its
+    manifest dir, plus one glob for the stage dirs next to it (those
+    exist without a root too). A missing root holds nothing."""
+    state = (_State.listed(fs, JPath, root) if fs.exists(JPath(root))
+             else _State(root, {}, {}, {}, {}))
+    mdir = state.dirs.get(_MANIFEST_DIR)
+    # the root's own glob metacharacters match literally
+    pattern = re.sub(r"([\\*?\[\]{}])", r"\\\1", root) + "{%s}" % ",".join(
+        _STAGE_DIRS.values())
+    base = len(root.rsplit("/", 1)[-1])
+    return state._replace(
+        manifest={} if mdir is None else _State.listed(
+            fs, JPath, mdir.toString()).files,
+        stage={st.getPath().getName()[base:]: st.getPath()
+               for st in fs.globStatus(JPath(pattern)) or ()})
 
 
 def _hadoop_fs(spark, path: str):
@@ -1083,22 +1157,18 @@ def write_index_manifest(spark, index_path: str, manifest: dict, *,
     # Hadoop rename can report failure by returning false, so both
     # renames are checked; on failure the swap aborts with the previous
     # manifest in place (as the backup at worst, which readers serve).
-    final = JPath(f"{target}/manifest.json")
-    prev = JPath(f"{target}/{_MANIFEST_PREV}")
-    tmp = JPath(f"{target}/{_MANIFEST_TMP}")
+    final, prev, tmp = (JPath(f"{target}/{n}") for n in (
+        "manifest.json", _MANIFEST_PREV, _MANIFEST_TMP))
     # the outgoing manifest's sidecar generation survives one more write
-    prev_rels = (
-        _manifest_rels(_fs_read_bytes(spark, f"{target}/manifest.json"))
-        if wrote_sidecar and fs.exists(final) else set()
-    )
+    prev_rels = (_manifest_rels(_fs_read_bytes(
+        spark, f"{target}/manifest.json")) if wrote_sidecar else set())
     _fs_write_bytes(
         spark, f"{target}/{_MANIFEST_TMP}", payload.encode("utf-8")
     )
     # drop stale leftovers: legacy multi-file text layouts (visible
     # part-* files) and a previous crashed swap's backup
     for st in fs.listStatus(JPath(target)):
-        name = st.getPath().getName()
-        if name not in ("manifest.json", _MANIFEST_TMP):
+        if st.getPath().getName() not in ("manifest.json", _MANIFEST_TMP):
             fs.delete(st.getPath(), True)
     if fs.exists(final) and not _rename_ok(fs, final, prev):
         fs.delete(tmp, False)  # abort: current manifest untouched
@@ -1144,14 +1214,18 @@ def _sidecar_digest(payload) -> str:
     return h.hexdigest()[:12]
 
 
-def _manifest_rels(raw: bytes | None) -> set:
-    """The sidecar pointer rel-paths a raw manifest JSON references."""
+def _json_object(raw: bytes | None) -> dict | None:
+    """``raw`` parsed, when it is a JSON object; None otherwise."""
     try:
         m = json.loads((raw or b"").decode("utf-8"))
-    except (ValueError, UnicodeDecodeError):
-        return set()
-    if not isinstance(m, dict):
-        return set()
+    except ValueError:  # UnicodeDecodeError included
+        return None
+    return m if isinstance(m, dict) else None
+
+
+def _manifest_rels(raw: bytes | None) -> set:
+    """The sidecar pointer rel-paths a raw manifest JSON references."""
+    m = _json_object(raw) or {}
     return {
         m[ptr] for _, (ptr, _) in _SIDECAR_KEYS.items()
         if isinstance(m.get(ptr), str)
@@ -1165,13 +1239,9 @@ def _gc_sidecar_generations(spark, fs, JPath, root: str, keep: set) -> int:
     removed = 0
     for d in (_CENTROID_SIDECAR_DIR, _CODEBOOK_SIDECAR_DIR):
         dpath = JPath(f"{root}/{d}")
-        if not fs.exists(dpath):
-            continue
-        for st in fs.listStatus(dpath):
-            name = st.getPath().getName()
-            if f"{d}/{name}" not in keep:
-                if fs.delete(st.getPath(), False):
-                    removed += 1
+        for st in fs.listStatus(dpath) if fs.exists(dpath) else ():
+            if f"{d}/{st.getPath().getName()}" not in keep:
+                removed += bool(fs.delete(st.getPath(), False))
     return removed
 
 
@@ -1340,16 +1410,14 @@ def read_index_manifest(spark, index_path: str, *,
 
     for cand in _manifest_candidates(index_path, search_parents):
         # one small JSON file, read driver-side: a spark.read.text would
-        # launch a job per path-only probe, append and drift check
-        data = _fs_read_bytes(spark, f"{cand}/{_MANIFEST_DIR}/manifest.json")
-        if data:
-            return _parse(data.decode("utf-8"), cand)
-        # a reader inside write_index_manifest's rename window, or a crash
-        # between its two renames: the backup carries the previous
-        # manifest, so the swap stays invisible to concurrent probes
-        data = _fs_read_bytes(spark, f"{cand}/{_MANIFEST_DIR}/{_MANIFEST_PREV}")
-        if data:
-            return _parse(data.decode("utf-8"), cand)
+        # launch a job per path-only probe, append and drift check. A
+        # reader inside write_index_manifest's rename window, or after a
+        # crash between its two renames, gets the backup, which carries
+        # the previous manifest: the swap stays invisible to probes
+        for name in ("manifest.json", _MANIFEST_PREV):
+            data = _fs_read_bytes(spark, f"{cand}/{_MANIFEST_DIR}/{name}")
+            if data:
+                return _parse(data.decode("utf-8"), cand)
         fs, JPath = _hadoop_fs(spark, cand)
         if not fs.exists(JPath(f"{cand}/{_MANIFEST_DIR}")):
             continue  # no manifest dir here — try the next ancestor
@@ -1440,32 +1508,40 @@ def _check_stale_append_markers(spark, index_root: str, epoch: int,
         )
 
 
-def _read_index_root(spark, index_path: str, part_col: str) -> DataFrame:
+def _depth_groups(spark, state: _State, part_col: str) -> list:
+    """The data dirs of ``state``'s root read per partition depth, each
+    group under the root as ``basePath``: the built ``{part_col}=*``
+    dirs, then the ``ingest_batch=*`` dirs; an empty group is left out."""
+    return [spark.read.option("basePath", state.root).parquet(
+                *[d.toString() for d in dirs])
+            for dirs in (state.data(f"{part_col}="),
+                         state.data("ingest_batch=")) if dirs]
+
+
+def _union_groups(groups: list) -> DataFrame:
+    """``groups`` unioned by name on the last group's columns, less the
+    ``ingest_batch`` bookkeeping column."""
+    cols = [c for c in groups[-1].columns if c != "ingest_batch"]
+    return reduce(DataFrame.unionByName, [g.select(*cols) for g in groups])
+
+
+def _read_index_root(spark, index_path: str, part_col: str,
+                     state: _State | None = None) -> DataFrame:
     """Read a materialized index root, tolerant of the MIXED layout
     :func:`lsh_append`'s at-least-once docs describe — one-shot build
     dirs (``table=*``/``cell=*``) at the root PLUS later batch-keyed
     ``ingest_batch=<i>`` subdirs — where a plain ``spark.read.parquet``
     fails partition discovery on conflicting depths. Uniform layouts
-    take the plain read (the extra cost is one driver-side listing);
-    mixed roots read per depth group under ``basePath`` and union on the
-    shared columns. The bookkeeping ``ingest_batch`` column is dropped
-    either way — probes never key on it."""
+    take the plain read (the extra cost is one driver-side listing, or
+    none given the caller's ``state``); mixed roots read per depth group
+    under ``basePath`` and union on the shared columns. The bookkeeping
+    ``ingest_batch`` column is dropped either way — probes never key on
+    it."""
     root = index_path.rstrip("/")
-    fs, JPath = _hadoop_fs(spark, root)
-    built, batched = [], []
-    for st in fs.listStatus(JPath(root)):
-        name = st.getPath().getName()
-        if not st.isDirectory():
-            continue
-        if name.startswith(f"{part_col}="):
-            built.append(st.getPath().toString())
-        elif name.startswith("ingest_batch="):
-            batched.append(st.getPath().toString())
-    if built and batched:
-        a = spark.read.option("basePath", root).parquet(*built)
-        b = spark.read.option("basePath", root).parquet(*batched)
-        cols = [c for c in b.columns if c != "ingest_batch"]
-        return a.select(*cols).unionByName(b.select(*cols))
+    if state is None:
+        state = _State.listed(*_hadoop_fs(spark, root), root)
+    if state.data(f"{part_col}=") and state.data("ingest_batch="):
+        return _union_groups(_depth_groups(spark, state, part_col))
     df = spark.read.parquet(root)
     return df.drop("ingest_batch") if "ingest_batch" in df.columns else df
 
@@ -1789,15 +1865,11 @@ def ivf_manifest(emb: DataFrame, centroids: np.ndarray, *,
     so append-only index assemblies (e.g. the streaming ingest key,
     which never one-shot-builds) can write the same self-describing
     manifest before their first append."""
-    manifest = {
-        "kind": "ivf",
-        "dim": dim,
-        "n_cells": n_cells if n_cells is not None else len(centroids),
-        "seed": seed,
-        "vec_col": vec_col,
-        "id_col": id_col,
-        "centroids": [[float(x) for x in row] for row in centroids],
-    }
+    manifest = dict(
+        kind="ivf", dim=dim,
+        n_cells=n_cells if n_cells is not None else len(centroids),
+        seed=seed, vec_col=vec_col, id_col=id_col,
+        centroids=[[float(x) for x in row] for row in centroids])
     if drift_reference:
         manifest["drift"] = ivf_drift_reference(
             emb, centroids, dim=dim, id_col=id_col, vec_col=vec_col
@@ -2271,8 +2343,9 @@ def knn_join(emb: DataFrame, query_ids: list, k: int = 5,
        :func:`dot_f64` — the sequential-fold form the oracle replicates
        bit-for-bit — via a broadcast hash join back to the Q query rows,
        then one Window ranks ``(round(cosine, 6) DESC, id)`` per query and
-       keeps k. BLAS only ever PRUNES; every returned number is the
-       certified JVM fold. ``overfetch`` absorbs BLAS-vs-fold ULP noise
+       keeps k (:func:`_rescore_topk`, the batch probes' rescore). BLAS
+       only ever PRUNES; every returned number is the certified JVM
+       fold. ``overfetch`` absorbs BLAS-vs-fold ULP noise
        and 6-dp rounding ties at the per-batch boundary (a displaced true
        top-k row must out-rank ≥ k + overfetch rows in its own batch,
        which a ≤1e-6 perturbation cannot cause).
@@ -2328,20 +2401,8 @@ def knn_join(emb: DataFrame, query_ids: list, k: int = 5,
         src.where(F.col(id_col).isin([int(q) for q in query_ids]))
         .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("__qv"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        cands.join(F.broadcast(queries), "q_id")
-        .select(
-            "q_id", id_col, label_col,
-            F.round(dot_f64(F.col(vec_col), F.col("__qv")), 6).alias("cosine"),
-        )
-        .transform(_finite)
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _rescore_topk(cands, queries, id_col, vec_col, [id_col, label_col],
+                         k)
 
 
 # --------------------------------------------- product quantization (PQ/ADC)
@@ -2704,8 +2765,9 @@ def _ivfpq_rows(emb: DataFrame, *, m: int = 16, ksub: int = 32,
     other ``config`` work as there), and every row gains its 16-byte
     ``pq_code``. Training adds the codebooks, fit on the id-ordered
     sample (on its residuals when ``residual``, FAISS's formulation,
-    under a ``cache_key`` of their own so they never collide with the
-    raw-vector books)."""
+    under a ``cache_key`` that names the centroids they were fit
+    against, so they never collide with the raw-vector books or with
+    another quantizer's residual books)."""
     if model is None:
         _check_ksub_int8(ksub, "ivfpq index build")
     rows, out = _ivf_rows(emb, seed=seed, id_col=id_col, vec_col=vec_col,
@@ -2713,11 +2775,11 @@ def _ivfpq_rows(emb: DataFrame, *, m: int = 16, ksub: int = 32,
     C = np.asarray(out["centroids"], dtype=np.float64)
     if model is None:
         del out["int8_cols"]
-        res_key = None if cache_key is None else f"{cache_key}|res"
+        if residual and cache_key is not None:
+            cache_key = f"{cache_key}|res|{_sidecar_digest(C)}"
         books = _train_codebooks(
             emb, C if residual else None, m=m, ksub=ksub, seed=seed,
-            id_col=id_col, vec_col=vec_col, dim=dim,
-            cache_key=res_key if residual else cache_key)
+            id_col=id_col, vec_col=vec_col, dim=dim, cache_key=cache_key)
         out.update(kind="ivfpq", m=m, ksub=ksub, codebooks=books.tolist(),
                    residual=bool(residual))
     return pq_encode_rows(
@@ -2882,10 +2944,6 @@ _CHECKED_KEYS = ("dim", "id_col", "vec_col", "seed", "bits", "n_tables",
 #: after the checked keys follow the build unless given
 _CONFIG_KEYS = _CHECKED_KEYS + ("quantized", "int8_cols", "residual")
 _COL_DEFAULTS = {"id_col": "vec_id", "vec_col": "embedding"}
-#: staging dirs a maintenance pass writes next to the index root
-#: (``{root}<suffix>``): each op's data stage and the INT8 store's stage
-_STAGE_DIRS = {"compact": "__compact_stage", "rebuild": "__rebuild_stage",
-               "int8_store": "__compact_qstage"}
 
 
 def _derive_config(manifest: dict | None, **given) -> dict:
@@ -3040,31 +3098,6 @@ def _build_index(emb: DataFrame, index_path: str, kind: str,
     return manifest
 
 
-def _acquire_maint_lock(spark, fs, JPath, root: str, caller: str) -> None:
-    """Atomically create the root-level maintenance lock or fail loudly.
-    ``FileSystem.createNewFile`` is the create-if-absent primitive —
-    atomic on HDFS and the local FS, so two maintainers (compact or
-    rebuild, in any pairing) racing each other error at acquisition
-    instead of interleaving destructive tombstone renames. Released when
-    the pass ends; a crash leaves it behind, where the next
-    maintainer's acquisition failure names :func:`ann_index_recover` as
-    the fix (recover clears it)."""
-    if not fs.createNewFile(JPath(f"{root}/{_MAINT_LOCK}")):
-        raise RuntimeError(
-            f"{caller}: maintenance lock {_MAINT_LOCK} already held at "
-            f"{root} — another compact/rebuild is running (wait for it), "
-            "or a previous one crashed (run ann_index_recover to roll "
-            "back/forward and clear the lock)."
-        )
-
-
-def _root_dirs(fs, JPath, root: str, prefixes: tuple) -> list:
-    """The directories right under ``root`` whose names start with one
-    of ``prefixes``."""
-    return [st.getPath() for st in fs.listStatus(JPath(root))
-            if st.isDirectory() and st.getPath().getName().startswith(prefixes)]
-
-
 class _Pass(NamedTuple):
     """A compact or rebuild that holds the maintenance lock, with what
     its pre-flight read."""
@@ -3077,6 +3110,7 @@ class _Pass(NamedTuple):
     manifest: dict
     fam: _Family
     epoch: int
+    state: _State  # the root, read after taking the lock
     markers: set  # the append markers the pass snapshotted
     old_dirs: list  # the data dirs the swap replaces
     files_in: list  # (path, bytes) of their data files
@@ -3107,30 +3141,38 @@ def _maintenance(spark, index_path: str, op: str, target_bytes: int):
     epoch = int(manifest.get("epoch", 0))
     root = index_path.rstrip("/")
     fs, JPath = _hadoop_fs(spark, root)
-    _acquire_maint_lock(spark, fs, JPath, root, caller)
+    # createNewFile is create-if-absent, atomic on HDFS and the local
+    # FS: two maintainers racing each other fail here instead of
+    # interleaving tombstone renames
+    if not fs.createNewFile(JPath(f"{root}/{_MAINT_LOCK}")):
+        raise RuntimeError(
+            f"{caller}: maintenance lock {_MAINT_LOCK} already held at "
+            f"{root} — another compact/rebuild is running (wait for it), "
+            "or a previous one crashed (run ann_index_recover to roll "
+            "back/forward and clear the lock)."
+        )
     try:
-        leftover = _root_dirs(fs, JPath, root, ("_tomb_",))
-        sentinels = [n for n in (_TOMB_STAGED_SENTINEL, _TOMB_SWAPPED_SENTINEL)
-                     if fs.exists(JPath(f"{root}/{n}"))]
-        if leftover or sentinels:
+        state = _index_state(fs, JPath, root)
+        tombs = state.found(_TOMBSTONES)
+        sentinels = [n for art in _LEFTOVERS if art.refuses
+                     and art is not _TOMBSTONES for n in state.found(art)]
+        if tombs or sentinels:
             raise RuntimeError(
                 f"{caller}: leftover tombstone dirs/sentinels under {root} "
-                f"({sorted(p.getName() for p in leftover)} + {sentinels}) — "
-                "a previous compact or rebuild crashed mid-swap. Run "
-                "ann_index_recover(spark, index_path) to roll it back or "
-                "forward, then re-run."
+                f"({tombs} + {sentinels}) — a previous compact or rebuild "
+                "crashed mid-swap. Run ann_index_recover(spark, index_path) "
+                "to roll it back or forward, then re-run."
             )
         _check_stale_append_markers(spark, root, epoch, caller)
         markers = set(_list_append_markers(spark, root))
-        old_dirs = _root_dirs(fs, JPath, root,
-                              (f"{fam.part_col}=", "ingest_batch="))
+        old_dirs = state.data((f"{fam.part_col}=", "ingest_batch="))
         if not old_dirs:
             raise ValueError(f"{caller}: no data directories under {root}")
         files_in = [f for d in old_dirs
                     for f in list_data_files(spark, d.toString())]
         n_out = max(1, -(-sum(sz for _, sz in files_in) // target_bytes))
         yield _Pass(spark, fs, JPath, root, op, manifest, fam, epoch,
-                    markers, old_dirs, files_in, n_out)
+                    state, markers, old_dirs, files_in, n_out)
     finally:
         fs.delete(JPath(f"{root}/{_MAINT_LOCK}"), False)
 
@@ -3192,7 +3234,7 @@ def _rewrite_and_swap(p: _Pass, rows: DataFrame, nxt: dict, *,
             fs.delete(JPath(s), True)
         raise RuntimeError(f"{caller}: {msg}")
 
-    staged = _root_dirs(fs, JPath, stage, (f"{fam.part_col}=",))
+    staged = _State.listed(fs, JPath, stage).data(f"{fam.part_col}=")
     if not staged:  # never swap the index away for an empty stage
         abort(f"staging produced no {fam.part_col}= dirs under {stage} — "
               "aborting before the swap")
@@ -3226,8 +3268,8 @@ def _rewrite_and_swap(p: _Pass, rows: DataFrame, nxt: dict, *,
         )
     write_index_manifest(spark, root, nxt)  # the commit
     _fs_write_bytes(spark, f"{root}/{_TOMB_SWAPPED_SENTINEL}", b"{}")
-    for d in _root_dirs(fs, JPath, root, ("_tomb_",)):
-        fs.delete(d, True)
+    for d in p.old_dirs:  # the pre-flight refused any other tombstone
+        fs.delete(JPath(f"{root}/_tomb_{d.getName()}"), True)
     if int8_rows is not None:
         # recover restores a _tomb__quantized in either direction, so a
         # crash in here leaves the old store, never none
@@ -3245,10 +3287,9 @@ def _rewrite_and_swap(p: _Pass, rows: DataFrame, nxt: dict, *,
     return {
         "kind": nxt["kind"],
         "epoch": nxt["epoch"],
-        "n_batch_dirs_folded": sum(
-            1 for d in p.old_dirs if d.getName().startswith("ingest_batch=")),
+        "n_batch_dirs_folded": len(p.state.data("ingest_batch=")),
         "n_files_out": len([
-            f for d in _root_dirs(fs, JPath, root, (f"{fam.part_col}=",))
+            f for d in _State.listed(fs, JPath, root).data(f"{fam.part_col}=")
             for f in list_data_files(spark, d.toString())
         ]),
     }
@@ -3329,7 +3370,7 @@ def ann_index_compact(spark, index_path: str, *,
     violating it an error instead of data loss.
 
     Two maintainers exclude each other through a root-level
-    ``_maint.lock`` (:func:`_acquire_maint_lock`), taken on entry and
+    ``_maint.lock`` (:func:`_maintenance`), taken on entry and
     released on every exit path: the epoch/marker protocol covers
     append-vs-maintenance, the lock covers maintenance-vs-maintenance.
     A crashed holder leaves the lock behind; :func:`ann_index_recover`
@@ -3359,12 +3400,7 @@ def ann_index_compact(spark, index_path: str, *,
 
     with _maintenance(spark, index_path, "compact", target_bytes) as p:
         root = p.root
-        groups = []
-        for prefix in (f"{p.fam.part_col}=", "ingest_batch="):
-            dirs = [d.toString() for d in p.old_dirs
-                    if d.getName().startswith(prefix)]
-            if dirs:
-                groups.append(spark.read.option("basePath", root).parquet(*dirs))
+        groups = _depth_groups(spark, p.state, p.fam.part_col)
         col_sets = [{c for c in g.columns if c != "ingest_batch"} for g in groups]
         if len(groups) == 2 and col_sets[0] != col_sets[1]:
             raise RuntimeError(
@@ -3374,10 +3410,7 @@ def ann_index_compact(spark, index_path: str, *,
                 "would drop the difference). Align the schemas (re-ingest "
                 "or backfill the missing column) and re-run."
             )
-        data_cols = [c for c in groups[-1].columns if c != "ingest_batch"]
-        rows = groups[0].select(*data_cols)
-        for g in groups[1:]:
-            rows = rows.unionByName(g.select(*data_cols))
+        rows = _union_groups(groups)
         int8_rows = None
         qroot = _lsh_quantized_path(root)
         if _quantized_store_exists(spark, root):
@@ -3473,7 +3506,8 @@ def ann_index_rebuild(spark, index_path: str, corpus=None, *,
                     "(hashes), not vectors — pass the corpus DataFrame to "
                     "re-hash"
                 )
-            resident = _read_index_root(spark, p.root, fam.part_col)
+            resident = _read_index_root(spark, p.root, fam.part_col,
+                                        p.state)
             corpus = resident.select(
                 *[c for c in resident.columns if c not in fam.model_cols])
         config = _derive_config(manifest, n_cells=n_cells, m=m, ksub=ksub,
@@ -3496,223 +3530,146 @@ def ann_index_rebuild(spark, index_path: str, corpus=None, *,
 def ann_index_recover(spark, index_path: str) -> dict:
     """Heal a crashed :func:`ann_index_compact` / :func:`ann_index_rebuild`
     / manifest swap — the machine version of the instruction the
-    leftover-tombstone error prints.
+    leftover-tombstone error prints. What it does with each artifact is
+    the ``recover`` column of ``_LEFTOVERS``.
+
+    A crashed manifest swap heals first, since the committed epoch
+    decides a crashed pass's direction: the backup is renamed back when
+    ``manifest.json`` is missing and dropped otherwise; the temp is
+    dropped when a committed manifest or backup exists, renamed into
+    place when it is the only copy and parses (deleting it would leave
+    the index manifest-less), and kept and reported
+    (``manifest_tmp_kept``) when it does not. Heal renames go through
+    :func:`_rename_ok`, so a failed one deletes nothing.
 
     Both maintainers commit by one write, the manifest at epoch + 1
-    (:func:`_rewrite_and_swap`), so for either op the direction follows
-    from the manifest's epoch against the pre-swap epoch the staged
-    sentinel (``_tomb_staged.json``) recorded:
+    (:func:`_rewrite_and_swap`), so the direction is the manifest's
+    epoch against the pre-swap epoch the staged sentinel recorded:
 
-    - **Roll BACK** (epoch not bumped): tombstones hold the ORIGINAL
-      bytes, so restoring them is lossless wherever in the swap the
-      crash happened, and the old manifest is still authoritative — a
-      rolled-back rebuild leaves the old quantizer serving its own
-      layout, never a new-layout/old-manifest mix. Swapped-in dirs are
-      deleted first, by the names the staged sentinel records (it is
-      written AFTER tombstoning completes): a batch FOLD stages names
-      with no tombstone counterpart, and restoring originals next to
-      them would double every folded row.
-    - **Roll FORWARD** (epoch bumped, or a ``_tomb_swapped.json``
-      sentinel present): the swapped-in dirs are the index. Recovery
-      FINISHES the crashed pass: redundant tombstones and sentinels are
-      deleted and the markers the sentinel snapshotted are consumed. A
-      crash state an older compaction left (it wrote the swapped
-      sentinel first and bumped the epoch last) gets its epoch bumped
-      here. Finishing is gated on the sentinel's EPOCH record, not its
-      marker list, so a pass whose marker snapshot was empty (no
-      appends since the last fold) still finishes. (The oldest
-      sentinels carry no marker/epoch record; for those the pending
-      markers are left and reported via ``pending_markers`` — they
-      describe folded ``ingest_batch`` dirs until the next compaction
-      consumes them.)
+    - **roll back** (not bumped): the staged dirs the sentinel names are
+      deleted first (a batch fold stages names with no tombstone
+      counterpart, and restoring next to them would double its rows),
+      then the tombstones, which hold the original bytes, are renamed
+      back; the old manifest still serves its own layout;
+    - **roll forward** (bumped, or a swapped sentinel present): the
+      tombstones are deleted, the sentinel's markers consumed, and an
+      epoch a compaction had not bumped yet is bumped here
+      (``epoch_finished`` is 1 when the manifest ends at the pass's
+      committed epoch). A sentinel with no epoch record leaves its
+      markers pending (``pending_markers``).
 
-    A tombstoned LSH INT8 store (``_tomb__quantized``) is restored in
-    either direction: its swap runs after the commit, so it is the last
-    complete store (after a rebuild over a changed corpus, a deep
-    :func:`ann_index_verify` reports the ids it lacks).
+    A tombstoned INT8 store (``_tomb__quantized``) is restored either
+    way: its swap runs after the commit, so it is the last complete
+    store. An unreadable staged sentinel (a truncated write) rolls back
+    when no visible data dir coexists with the tombstones, since it is
+    written before any staged rename; otherwise which dirs were staged
+    is unknown, and recovery raises naming the manual step. After any
+    heal, the sidecar generations no manifest copy references (a
+    rolled-back rebuild's) are removed (``sidecar_orphans_removed``).
+    An append that raced into the crashed swap survives a roll-back and
+    is flagged by the epoch/marker protocol on the next operation.
 
-    A CORRUPT staged sentinel (truncated mid-write — ``_fs_write_bytes``
-    is not atomic) does not crash the recovery tool: the sentinel is
-    written after tombstoning and before any staged rename, so when no
-    visible data dirs coexist with the tombstones the corrupt sentinel
-    is provably empty and the roll-back proceeds; when data dirs DO
-    coexist the state is ambiguous (deleting them could lose a fold,
-    keeping them could double rows) and recovery raises a targeted
-    error naming the manual step instead of guessing.
-
-    A crashed MANIFEST swap (the staged rename in
-    :func:`write_index_manifest`) heals FIRST (the committed epoch
-    decides the direction above): a stranded ``.manifest.json.prev`` is
-    renamed back when ``manifest.json`` is missing; an uncommitted
-    ``.manifest.json.tmp`` is dropped when a committed manifest or
-    backup exists, but when the tmp is the ONLY copy (both missing —
-    e.g. a rebuild over a previously-crashed swap) and it parses as
-    valid JSON it is renamed INTO PLACE instead of destroyed (deleting
-    the last complete manifest copy would leave the index permanently
-    manifest-less); an unparseable only-copy tmp is left on disk and
-    reported (``manifest_tmp_kept``). Both heal renames go through
-    :func:`_rename_ok` — the local ChecksumFileSystem and some
-    object-store adapters report rename failure by THROWING, so a
-    failed rename degrades to the reported state (``manifest_tmp_kept``
-    / prev left for the reader fallback) with nothing deleted.
-    Digest-named sidecar generations no on-disk manifest copy
-    references (a rolled-back rebuild's) are removed after any actual
-    heal (``sidecar_orphans_removed``); a no-op call leaves sidecars
-    untouched.
-
-    The maintenance lock (``_maint.lock``) is cleared unconditionally —
-    recovery presumes no live maintainer, the same assumption its
-    tombstone restoration already makes. An append that raced INTO the
-    crashed swap window survives a roll-back (its dirs are neither
-    tombstoned nor staged) — the epoch/marker protocol still flags it
-    loudly on the next operation.
-
-    No-op (``{"recovered": 0}``) when nothing is pending. Returns
-    ``{"recovered", "staging_removed", "rolled_forward",
+    Returns ``{"recovered", "staging_removed", "rolled_forward",
     "staged_removed", "manifest_healed", "markers_consumed",
     "epoch_finished", "pending_markers", "manifest_tmp_kept",
-    "sidecar_orphans_removed", "lock_cleared"}``; ``epoch_finished`` is
-    1 when a roll-forward leaves the manifest at the crashed pass's
-    committed epoch, whether the pass or recovery wrote it.
+    "sidecar_orphans_removed", "lock_cleared"}``, all 0 when nothing
+    was pending.
     """
     root = index_path.rstrip("/")
     fs, JPath = _hadoop_fs(spark, root)
-    jroot = JPath(root)
-    recovered = rolled_forward = staged_removed = 0
-    markers_consumed = epoch_finished = 0
-    manifest_healed = manifest_tmp_kept = 0
+    out = dict.fromkeys((
+        "recovered", "staging_removed", "rolled_forward", "staged_removed",
+        "manifest_healed", "markers_consumed", "epoch_finished",
+        "pending_markers", "manifest_tmp_kept", "sidecar_orphans_removed",
+        "lock_cleared"), 0)
 
-    # Heal a crashed manifest swap FIRST — the committed manifest's
-    # epoch is what decides a crashed pass's direction below.
     mdir = f"{root}/{_MANIFEST_DIR}"
-    tmp = JPath(f"{mdir}/{_MANIFEST_TMP}")
-    prev = JPath(f"{mdir}/{_MANIFEST_PREV}")
-    final = JPath(f"{mdir}/manifest.json")
-    if fs.exists(tmp):
-        if fs.exists(final) or fs.exists(prev):
-            fs.delete(tmp, False)  # uncommitted attempt — roll back
-            manifest_healed += 1
+    tmp, prev, final = (JPath(f"{mdir}/{n}") for n in (
+        _MANIFEST_TMP, _MANIFEST_PREV, "manifest.json"))
+    have = (_State.listed(fs, JPath, mdir).files if fs.exists(JPath(mdir))
+            else {})
+    if _MANIFEST_TMP in have:
+        if "manifest.json" in have or _MANIFEST_PREV in have:
+            fs.delete(tmp, False)  # an uncommitted attempt
+            out["manifest_healed"] += 1
+        elif _json_object(_fs_read_bytes(spark, f"{mdir}/{_MANIFEST_TMP}")) \
+                is not None and _rename_ok(fs, tmp, final):
+            out["manifest_healed"] += 1  # the only copy, and it parses
         else:
-            # the tmp is the ONLY manifest copy: roll it forward when it
-            # parses, never destroy it blind
-            data = _fs_read_bytes(spark, f"{mdir}/{_MANIFEST_TMP}")
-            parsed = None
-            try:
-                parsed = json.loads((data or b"").decode("utf-8"))
-            except (ValueError, UnicodeDecodeError):
-                parsed = None
-            if isinstance(parsed, dict) and _rename_ok(fs, tmp, final):
-                manifest_healed += 1
-            else:
-                manifest_tmp_kept = 1  # unreadable only-copy: report it
-    if fs.exists(prev):
-        if not fs.exists(final):
-            if _rename_ok(fs, prev, final):
-                manifest_healed += 1
-            # else: prev stays on disk — the read_index_manifest backup
-            # fallback keeps serving it; nothing was deleted
-        else:
+            out["manifest_tmp_kept"] = 1
+    if _MANIFEST_PREV in have:
+        if "manifest.json" in have:
             fs.delete(prev, False)
-            manifest_healed += 1
+            out["manifest_healed"] += 1
+        elif _rename_ok(fs, prev, final):  # else readers keep serving it
+            out["manifest_healed"] += 1
 
-    if fs.exists(jroot):
-        tombs = _root_dirs(fs, JPath, root, ("_tomb_",))
-        visible_data = [d.getName() for d in _root_dirs(fs, JPath, root, ("",))
-                        if "=" in d.getName() and not d.getName().startswith("_")]
-        staged_names: list[str] = []
-        sentinel: dict = {}
-        data = _fs_read_bytes(spark, f"{root}/{_TOMB_STAGED_SENTINEL}")
-        swapped = fs.exists(JPath(f"{root}/{_TOMB_SWAPPED_SENTINEL}"))
-        if data:
-            try:
-                sentinel = json.loads(data.decode("utf-8"))
-                staged_names = sentinel.get("staged", [])
-            except (ValueError, UnicodeDecodeError):
-                # Truncated mid-write. The sentinel lands after
-                # tombstoning and BEFORE any staged rename, so a mid-write
-                # crash leaves zero visible data dirs; anything else is
-                # ambiguous — refuse to guess.
-                if not swapped and tombs and visible_data:
-                    raise RuntimeError(
-                        f"ann_index_recover: {_TOMB_STAGED_SENTINEL} at "
-                        f"{root} is unreadable (truncated write?) while "
-                        f"data dirs {sorted(visible_data)} coexist with "
-                        f"{len(tombs)} tombstones — cannot tell staged "
-                        "dirs from racing appends. Manually delete the "
-                        "dirs the crashed pass staged in (compare "
-                        "contents against the _tomb_* originals), delete "
-                        "the sentinel, then re-run recover."
-                    )
-                sentinel, staged_names = {}, []
-        # the commit is the manifest write at the sentinel's epoch + 1
-        if not swapped and sentinel.get("epoch") is not None:
-            m = read_index_manifest(spark, root)
-            swapped = m is not None and int(m.get("epoch", 0)) > int(
-                sentinel["epoch"])
-        if not swapped and staged_names and tombs:
-            # roll back: drop the swapped-in dirs first (their rows all
-            # live in the tombstones), so restoration cannot collide
-            for name in staged_names:
-                target = JPath(f"{root}/{name}")
-                if fs.exists(target):
-                    fs.delete(target, True)
-                    staged_removed += 1
-        for p in tombs:
-            name = p.getName()
-            orig = name[len("_tomb_"):]
-            if swapped and orig != "_quantized":
-                fs.delete(p, True)  # roll forward: finish the cleanup
-                rolled_forward += 1
-                continue
-            target = JPath(f"{root}/{orig}")
-            if fs.exists(target):  # partial new dir — originals win
-                fs.delete(target, True)
-            fs.rename(p, target)
-            recovered += 1
-        if swapped and sentinel.get("epoch") is not None:
-            # finish the crashed pass: consume the markers it snapshotted,
-            # and bump the epoch for a compaction that bumped it last
-            for name in sentinel.get("markers", []):
-                if fs.delete(JPath(f"{root}/{_APPEND_LOG_DIR}/{name}"), False):
-                    markers_consumed += 1
-            m = read_index_manifest(spark, root)
-            if m is not None:
-                if int(m.get("epoch", 0)) == int(sentinel["epoch"]):
-                    write_index_manifest(spark, root, _epoch_bumped(
-                        m, int(sentinel["epoch"]) + 1))
-                epoch_finished = 1
-        for sentinel_name in (_TOMB_STAGED_SENTINEL, _TOMB_SWAPPED_SENTINEL):
-            fs.delete(JPath(f"{root}/{sentinel_name}"), False)
-    staging_removed = 0
-    for suffix in _STAGE_DIRS.values():
-        if fs.exists(JPath(f"{root}{suffix}")):
-            fs.delete(JPath(f"{root}{suffix}"), True)
-            staging_removed += 1
-    lock_cleared = int(bool(fs.delete(JPath(f"{root}/{_MAINT_LOCK}"), False)))
-    # A rolled-back rebuild leaves the generation it digest-named but
-    # never committed — an orphan no surviving manifest copy references.
-    # Remove it (keep every rel any on-disk manifest copy still points
-    # at). Scoped to recoveries that healed something: a true no-op call
-    # must not collect the previous generation write_index_manifest
-    # deliberately keeps for lazy readers.
-    sidecar_orphans_removed = 0
-    if recovered or rolled_forward or staged_removed or manifest_healed:
+    state = _index_state(fs, JPath, root)
+    tombs = state.found(_TOMBSTONES)
+    swapped = _TOMB_SWAPPED_SENTINEL in state.files
+    data = (_fs_read_bytes(spark, f"{root}/{_TOMB_STAGED_SENTINEL}")
+            if _TOMB_STAGED_SENTINEL in state.files else None)
+    sentinel = _json_object(data) if data else {}
+    if sentinel is None:
+        visible_data = [n for n in state.dirs
+                        if "=" in n and not n.startswith("_")]
+        if not swapped and tombs and visible_data:
+            raise RuntimeError(
+                f"ann_index_recover: {_TOMB_STAGED_SENTINEL} at "
+                f"{root} is unreadable (truncated write?) while "
+                f"data dirs {sorted(visible_data)} coexist with "
+                f"{len(tombs)} tombstones — cannot tell staged "
+                "dirs from racing appends. Manually delete the "
+                "dirs the crashed pass staged in (compare "
+                "contents against the _tomb_* originals), delete "
+                "the sentinel, then re-run recover."
+            )
+        sentinel = {}
+    if not swapped and sentinel.get("epoch") is not None:
+        m = read_index_manifest(spark, root)
+        swapped = m is not None and int(m.get("epoch", 0)) > int(
+            sentinel["epoch"])
+    if not swapped and tombs:
+        for name in sentinel.get("staged", []):
+            if fs.delete(JPath(f"{root}/{name}"), True):
+                out["staged_removed"] += 1
+    for name in tombs:
+        orig = name[len(_TOMBSTONES.name):]
+        if swapped and orig != "_quantized":
+            fs.delete(state.dirs[name], True)
+            out["rolled_forward"] += 1
+            continue
+        target = JPath(f"{root}/{orig}")
+        fs.delete(target, True)  # a partial new dir: the originals win
+        fs.rename(state.dirs[name], target)
+        out["recovered"] += 1
+    if swapped and sentinel.get("epoch") is not None:
+        for name in sentinel.get("markers", []):
+            if fs.delete(JPath(f"{root}/{_APPEND_LOG_DIR}/{name}"), False):
+                out["markers_consumed"] += 1
+        m = read_index_manifest(spark, root)
+        if m is not None:
+            if int(m.get("epoch", 0)) == int(sentinel["epoch"]):
+                write_index_manifest(spark, root, _epoch_bumped(
+                    m, int(sentinel["epoch"]) + 1))
+            out["epoch_finished"] = 1
+    for art in _LEFTOVERS:
+        if art.recover == "drop":
+            for name in state.found(art):
+                if fs.delete(getattr(state, art.where)[name], True) \
+                        and art.counted:
+                    out[art.counted] += 1
+    # a no-op call must not collect the previous generation
+    # write_index_manifest keeps for lazy readers
+    if (out["recovered"] or out["rolled_forward"] or out["staged_removed"]
+            or out["manifest_healed"]):
         keep = set()
         for name in ("manifest.json", _MANIFEST_PREV, _MANIFEST_TMP):
             keep |= _manifest_rels(_fs_read_bytes(spark, f"{mdir}/{name}"))
-        sidecar_orphans_removed = _gc_sidecar_generations(
-            spark, fs, JPath, root, keep=keep
-        )
-    return {"recovered": recovered, "staging_removed": staging_removed,
-            "rolled_forward": rolled_forward,
-            "staged_removed": staged_removed,
-            "manifest_healed": manifest_healed,
-            "markers_consumed": markers_consumed,
-            "epoch_finished": epoch_finished,
-            "pending_markers": len(_list_append_markers(spark, root)),
-            "manifest_tmp_kept": manifest_tmp_kept,
-            "sidecar_orphans_removed": sidecar_orphans_removed,
-            "lock_cleared": lock_cleared}
+        out["sidecar_orphans_removed"] = _gc_sidecar_generations(
+            spark, fs, JPath, root, keep=keep)
+    out["pending_markers"] = len(_list_append_markers(spark, root))
+    return out
 
 
 def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
@@ -3725,12 +3682,10 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
     Default checks (bounded):
 
     - manifest present, known ``kind``, integer ``epoch``;
-    - race state: leftover ``_tomb_*`` dirs or swap sentinels (a
-      crashed compact or rebuild — run :func:`ann_index_recover`),
-      leftover staging dirs, stale
-      append markers (epoch older than the manifest's — possible lost
-      rows), pending marker count (normal, consumed by the next
-      compaction);
+    - crash state: each artifact of ``_LEFTOVERS`` present (run
+      :func:`ann_index_recover`); stale append markers (epoch older
+      than the manifest's — possible lost rows); the pending marker
+      count (normal, consumed by the next compaction);
     - layout: data dirs exist; mixed build+batch depth flagged
       (readable everywhere, but compaction-worthy);
     - schema: the family's required columns exist (postings/cell/code
@@ -3760,53 +3715,28 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
     epoch = int(manifest.get("epoch", 0))
     root = manifest.get("_root", index_path).rstrip("/")
     if kind not in _FAMILIES:
-        problems.append(f"unknown index kind {kind!r}")
         return {"ok": False, "kind": kind, "epoch": epoch,
-                "problems": problems, "checks": checks}
+                "problems": [f"unknown index kind {kind!r}"], "checks": {}}
     fam = _FAMILIES[kind]
     part_col = fam.part_col
     id_col, vec_col = _cols(manifest, ("id_col", "vec_col"))
 
     fs, JPath = _hadoop_fs(spark, root)
-    tomb_data_debris = False  # non-empty tombstones break partition discovery
-    names = [d.getName() for d in _root_dirs(fs, JPath, root, ("",))]
-    tombs = [n for n in names if n.startswith("_tomb_")]
-    if tombs:
-        problems.append(
-            f"leftover tombstones {sorted(tombs)} — crashed compact or "
-            "rebuild; run ann_index_recover")
-        # a tombstone carrying data files would be parsed as a
-        # conflicting partition column by the root read below —
-        # skip the scan checks until recovery clears it
-        tomb_data_debris = any(
-            fs.listStatus(JPath(f"{root}/{t}")) for t in tombs
-        )
-    for suffix in _STAGE_DIRS.values():
-        if fs.exists(JPath(f"{root}{suffix}")):
-            problems.append(f"leftover staging dir {root}{suffix}")
-    for sentinel in (_TOMB_STAGED_SENTINEL, _TOMB_SWAPPED_SENTINEL):
-        if fs.exists(JPath(f"{root}/{sentinel}")):
-            problems.append(
-                f"leftover swap sentinel {sentinel} — crashed compact "
-                "or rebuild; run ann_index_recover")
-    if fs.exists(JPath(f"{root}/{_MAINT_LOCK}")):
-        problems.append(
-            f"maintenance lock {_MAINT_LOCK} held — a compact/rebuild "
-            "is live, or one crashed (run ann_index_recover if no "
-            "maintainer is running)")
-    mdir = f"{root}/{_MANIFEST_DIR}"
-    if fs.exists(JPath(f"{mdir}/{_MANIFEST_TMP}")):
-        problems.append(
-            f"leftover manifest temp {_MANIFEST_TMP} — interrupted "
-            "manifest write; run ann_index_recover")
-    if fs.exists(JPath(f"{mdir}/{_MANIFEST_PREV}")):
-        problems.append(
-            f"leftover manifest backup {_MANIFEST_PREV}"
-            + ("" if fs.exists(JPath(f"{mdir}/manifest.json"))
+    state = _index_state(fs, JPath, root)
+    serving = ("" if "manifest.json" in state.manifest
                else " serving reads (manifest.json missing)")
-            + " — crashed manifest swap; run ann_index_recover")
-    built = [n for n in names if n.startswith(f"{part_col}=")]
-    batched = [n for n in names if n.startswith("ingest_batch=")]
+    for art in _LEFTOVERS:
+        found = state.found(art)
+        if found:
+            problems.append(art.problem.format(
+                names=found, name=found[0], root=root, serving=serving))
+    # a tombstone carrying data files would be parsed as a conflicting
+    # partition column by the root read below — skip the scan checks
+    # until recovery clears it
+    tomb_data_debris = any(fs.listStatus(state.dirs[t])
+                           for t in state.found(_TOMBSTONES))
+    built = state.data(f"{part_col}=")
+    batched = state.data("ingest_batch=")
     checks["n_built_dirs"] = len(built)
     checks["n_batch_dirs"] = len(batched)
     checks["mixed_layout"] = bool(built and batched)
@@ -3821,10 +3751,9 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
             f"{sorted(set(stale.values()))} < manifest epoch {epoch}) — "
             "an append overlapped a compaction; rows may be lost")
 
-    if not tomb_data_debris and (
-            not problems or (checks.get("n_built_dirs") or
-                             checks.get("n_batch_dirs"))):
-        df = _read_index_root(spark, root, part_col)
+    has_q = fam.int8_store and _quantized_store_exists(spark, root)
+    if not tomb_data_debris and (built or batched):
+        df = _read_index_root(spark, root, part_col, state)
         need = set(_cols(manifest, fam.required))
         missing = need - set(df.columns)
         if missing:
@@ -3839,23 +3768,16 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
                         f"{part_col}={mx} outside the model range "
                         f"[0, {n_parts})")
             sample = df.limit(1).collect()
-            if sample and vec_col in need:
-                dim = manifest.get("dim")
-                vec = sample[0][vec_col]
-                if dim is not None and vec is not None \
-                        and len(vec) != int(dim):
-                    problems.append(
-                        f"sampled vector length {len(vec)} != manifest "
-                        f"dim {dim}")
-                if fam.codes:
-                    code_col, len_key, _ = fam.codes
-                    n_codes = manifest.get(len_key)
-                    code = sample[0][code_col]
-                    if n_codes is not None and code is not None \
-                            and len(code) != int(n_codes):
-                        problems.append(
-                            f"sampled {code_col} length {len(code)} != "
-                            f"manifest {len_key} {n_codes}")
+            sized = [("vector", vec_col, "dim")]
+            if fam.codes:
+                sized.append((fam.codes[0], *fam.codes[:2]))
+            for label, col, key in (sized if sample and vec_col in need
+                                    else ()):
+                want, got = manifest.get(key), sample[0][col]
+                if want is not None and got is not None \
+                        and len(got) != int(want):
+                    problems.append(f"sampled {label} length {len(got)} != "
+                                    f"manifest {key} {want}")
             if deep:
                 checks["n_rows"] = df.count()
                 dups = checks["n_rows"] - df.select(
@@ -3885,7 +3807,7 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
                 # why they are benign
                 if fam.dup_note and dups:
                     checks["note"] = fam.dup_note
-                if fam.int8_store and _quantized_store_exists(spark, root):
+                if has_q:
                     # postings/store id consistency: an id in the
                     # postings but absent from the INT8 store is
                     # silently DROPPED by the screen's semi-join — a
@@ -3908,15 +3830,13 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
                             "rebuild to restore store consistency")
 
     if fam.int8_store:
-        has_q = _quantized_store_exists(spark, root)
         checks["quantized_store"] = has_q
         if bool(manifest.get("quantized", False)) != has_q:
             problems.append(
                 f"manifest quantized={manifest.get('quantized')} but INT8 "
                 f"store {'present' if has_q else 'MISSING'}")
     for payload, (pointer, loader) in _SIDECAR_KEYS.items():
-        rel = dict.get(manifest, pointer) if isinstance(manifest, dict) \
-            else None
+        rel = dict.get(manifest, pointer)
         if rel:
             try:
                 loader(spark, root, rel)

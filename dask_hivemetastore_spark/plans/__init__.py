@@ -201,7 +201,7 @@ from .. import streaming  # noqa: F401,E402
 # Jaccard twin, leaving semdedup_survivors the ONLY rows-only key);
 # block 2 = the 12 keys whose ENGINE changed this round — every key
 # that builds/appends/compacts/probes a MATERIALIZED ANN index
-# traverses the r16 maintenance lock (_acquire_maint_lock in
+# traverses the r16 maintenance lock (taken in _maintenance for
 # compact/rebuild), the checked-rename manifest swap (r15 advisor #2),
 # the root-anchored lsh_append INT8 store, and (ivf_drift_check) the
 # scale-robust null-space drift axis: knn_ivfpq_topk, knn_ivfpq_join,

@@ -3908,3 +3908,140 @@ def test_recover_manifest_heal_survives_raising_rename(spark, tmp_path):
     stats = ann_index_recover(spark, idx2)
     assert stats["manifest_healed"] == 1
     assert os.path.exists(f"{mdir2}/manifest.json")
+
+
+# ---------------------------------------------------------------------------
+# One crash artifact at a time: verify names it, compaction refuses the
+# ones a crashed pass leaves mid-swap, recover heals every one
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def healthy_ivf_index(spark, tmp_path_factory):
+    from dask_hivemetastore_spark.catalog import load_table
+    from dask_hivemetastore_spark.operators.similarity import ivf_build_index
+    from .conftest import SF_SMOKE
+
+    idx = str(tmp_path_factory.mktemp("crash_states") / "healthy")
+    ivf_build_index(load_table(spark, SF_SMOKE, "embeddings"), idx,
+                    n_cells=8, cache_key=SF_SMOKE + "_crash", dim=64,
+                    drift_reference=False)
+    return idx
+
+
+def _plant_tombstone(idx):
+    cell = sorted(n for n in os.listdir(idx) if n.startswith("cell="))[0]
+    os.rename(f"{idx}/{cell}", f"{idx}/_tomb_{cell}")
+    return f"_tomb_{cell}"
+
+
+def _plant_file(name, data=b"{}"):
+    def plant(idx):
+        with open(f"{idx}/{name}", "wb") as f:
+            f.write(data)
+        return name
+    return plant
+
+
+def _plant_manifest_copy(name):
+    def plant(idx):
+        mdir = f"{idx}/_index_manifest"
+        with open(f"{mdir}/manifest.json", "rb") as src, \
+                open(f"{mdir}/{name}", "wb") as dst:
+            dst.write(src.read())
+        return name
+    return plant
+
+
+def _plant_stage(suffix):
+    def plant(idx):
+        os.makedirs(f"{idx}{suffix}")
+        return suffix
+    return plant
+
+
+#: artifact -> (plant it on an index root and return the name verify
+#: must report, whether ann_index_compact refuses to run over it)
+_CRASH_ARTIFACTS = {
+    "tombstone": (_plant_tombstone, True),
+    "staged_sentinel": (_plant_file(
+        "_tomb_staged.json",
+        b'{"staged": [], "markers": [], "epoch": 0, "op": "compact"}'), True),
+    "swapped_sentinel": (_plant_file("_tomb_swapped.json"), True),
+    "compact_stage": (_plant_stage("__compact_stage"), False),
+    "rebuild_stage": (_plant_stage("__rebuild_stage"), False),
+    "int8_stage": (_plant_stage("__compact_qstage"), False),
+    "lock": (_plant_file("_maint.lock", b""), True),
+    "manifest_tmp": (_plant_manifest_copy(".manifest.json.tmp"), False),
+    "manifest_prev": (_plant_manifest_copy(".manifest.json.prev"), False),
+}
+
+
+@pytest.mark.parametrize("artifact", list(_CRASH_ARTIFACTS))
+def test_crash_artifact_verify_compact_recover(spark, tmp_path,
+                                               healthy_ivf_index, artifact):
+    """Each artifact a crashed maintenance pass or manifest swap can
+    leave, planted alone on a healthy IVF index: ann_index_verify names
+    it, ann_index_compact refuses to run over exactly the tombstones,
+    swap sentinels and a held lock (and runs over the rest), and after
+    ann_index_recover the index verifies clean."""
+    import shutil
+
+    from dask_hivemetastore_spark.operators.similarity import (
+        ann_index_compact,
+        ann_index_recover,
+        ann_index_verify,
+    )
+
+    def visible(d):
+        return sorted(n for n in os.listdir(d) if not n.endswith(".crc"))
+
+    plant, refuses = _CRASH_ARTIFACTS[artifact]
+    idx = str(tmp_path / "idx")
+    shutil.copytree(healthy_ivf_index, idx)
+    assert ann_index_verify(spark, idx)["ok"]
+    name = plant(idx)
+    rep = ann_index_verify(spark, idx)
+    assert not rep["ok"], rep
+    assert any(name in p for p in rep["problems"]), rep
+    if refuses:
+        with pytest.raises(RuntimeError, match="ann_index_recover"):
+            ann_index_compact(spark, idx)
+    else:
+        assert ann_index_compact(spark, idx)["epoch"] == 1
+    ann_index_recover(spark, idx)
+    rep = ann_index_verify(spark, idx)
+    assert rep["ok"], rep
+    if refuses:  # nothing ran: recover put the root back as it was
+        assert visible(idx) == visible(healthy_ivf_index)
+    assert not any(n.startswith("idx__") for n in os.listdir(tmp_path))
+
+
+def test_residual_codebooks_follow_the_coarse_quantizer(spark, tmp_path):
+    """Residual IVF-PQ codebooks train on residuals against the build's
+    own centroids, so a residual build must not reuse books another
+    residual build trained against other centroids under the same
+    cache key: an 8-cell then a 4-cell build under one key give the
+    4-cell build the books a fresh uncached 4-cell training gives."""
+    import numpy as np
+
+    from dask_hivemetastore_spark.catalog import load_table
+    from dask_hivemetastore_spark.operators.similarity import (
+        ivfpq_build_index,
+    )
+    from .conftest import SF_SMOKE
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    key = SF_SMOKE + "_res_books"
+
+    def build(name, n_cells, cache_key):
+        return ivfpq_build_index(
+            emb, str(tmp_path / name), n_cells=n_cells, m=16, ksub=32,
+            dim=64, cache_key=cache_key, drift_reference=False,
+            residual=True)
+
+    _, books8 = build("c8", 8, key)
+    _, books4 = build("c4", 4, key)
+    _, fresh4 = build("fresh4", 4, None)
+    assert not np.array_equal(books8, fresh4)
+    assert np.array_equal(books4, fresh4)
