@@ -318,26 +318,33 @@ def similar_pairs(emb: DataFrame, threshold: float,
         F.col("ba") <= F.col("bb"),
     )
 
-    def unpack(rows):  # a packed block: its ids and its vector matrix
-        return (np.fromiter((r["i"] for r in rows), dtype=np.int64),
-                np.stack([np.asarray(r["v"], dtype=np.float64) for r in rows]))
-
     def screen(batches):
         for pdf in batches:
-            out_a = [np.empty(0, dtype=np.int64)]
-            out_b = [np.empty(0, dtype=np.int64)]
+            out_a: list[np.ndarray] = []
+            out_b: list[np.ndarray] = []
             for ba, ra, bb, rb in zip(pdf["ba"], pdf["ra"], pdf["bb"], pdf["rb"]):
-                ids_a, A = unpack(ra)
-                ids_b, Bm = (ids_a, A) if ba == bb else unpack(rb)
-                ai, bj = np.nonzero(A @ Bm.T >= threshold - margin)
+                ids_a = np.fromiter((r["i"] for r in ra), dtype=np.int64)
+                A = np.stack([np.asarray(r["v"], dtype=np.float64) for r in ra])
+                if ba == bb:
+                    ids_b, Bm = ids_a, A
+                else:
+                    ids_b = np.fromiter((r["i"] for r in rb), dtype=np.int64)
+                    Bm = np.stack([np.asarray(r["v"], dtype=np.float64) for r in rb])
+                sims = A @ Bm.T
+                ai, bj = np.nonzero(sims >= threshold - margin)
                 ia, ib = ids_a[ai], ids_b[bj]
-                if ba == bb:  # one triangle of the tile, no self pairs
+                if ba == bb:
                     keep = ia < ib
                     ia, ib = ia[keep], ib[keep]
-                out_a.append(np.minimum(ia, ib))
-                out_b.append(np.maximum(ia, ib))
-            yield pd.DataFrame({"id_a": np.concatenate(out_a),
-                                "id_b": np.concatenate(out_b)})
+                    out_a.append(ia)
+                    out_b.append(ib)
+                else:
+                    out_a.append(np.minimum(ia, ib))
+                    out_b.append(np.maximum(ia, ib))
+            yield pd.DataFrame({
+                "id_a": np.concatenate(out_a) if out_a else np.array([], dtype=np.int64),
+                "id_b": np.concatenate(out_b) if out_b else np.array([], dtype=np.int64),
+            })
 
     cands = tiles.mapInPandas(screen, "id_a long, id_b long")
     a = src.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
@@ -563,8 +570,16 @@ def lsh_manifest(*, dim: int, bits: int = 8, n_tables: int = 16,
     probes and ``ann_index_compact`` go through
     :func:`_read_index_root`, which handles the conflicting partition
     depths plain ``spark.read.parquet`` rejects.)"""
-    return dict(kind="lsh", dim=dim, bits=bits, n_tables=n_tables, seed=seed,
-                id_col=id_col, vec_col=vec_col, quantized=quantized)
+    return {
+        "kind": "lsh",
+        "dim": dim,
+        "bits": bits,
+        "n_tables": n_tables,
+        "seed": seed,
+        "id_col": id_col,
+        "vec_col": vec_col,
+        "quantized": quantized,
+    }
 
 
 def _lsh_postings(emb: DataFrame, *, dim: int, bits: int, n_tables: int,
@@ -926,52 +941,48 @@ class _Leftover(NamedTuple):
     # what ann_index_verify reports; {names}, {name}, {root} and
     # {serving} are filled in
     problem: str
-    refuses: bool  # the compact and rebuild pre-flight refuses it
-    # what ann_index_recover does: "roll" the swap back or forward,
-    # "heal" the manifest swap, or "drop" it, counted under ``counted``
-    recover: str
-    counted: str | None = None
+    drop: bool = False  # ann_index_recover deletes it once the rest healed
+    counted: str | None = None  # the recover result key the drop adds to
 
 
 _CRASHED = "crashed compact or rebuild; run ann_index_recover"
-# a data dir the swap renamed aside: its original bytes, so a roll-back
-# is lossless wherever the pass crashed
-_TOMBSTONES = _Leftover("dirs", "_tomb_", "leftover tombstones {names} — "
-                        + _CRASHED, True, "roll")
+# a data dir the swap renamed aside, holding its original bytes: recover
+# renames it back (roll-back) or deletes it (roll-forward)
+_TOMBSTONES = _Leftover("dirs", "_tomb_",
+                        "leftover tombstones {names} — " + _CRASHED)
 _LEFTOVERS = (
     _TOMBSTONES,
+    # a pass's staged rewrite; the next pass of that op overwrites it
+    *(_Leftover("stage", suffix, "leftover staging dir {root}{name}", True,
+                "staging_removed") for suffix in _STAGE_DIRS.values()),
     # written once tombstoning completes: the staged names (what a
     # roll-back deletes), the marker snapshot, the pre-swap epoch, the op
     _Leftover("files", _TOMB_STAGED_SENTINEL,
-              "leftover swap sentinel {name} — " + _CRASHED, True, "drop"),
+              "leftover swap sentinel {name} — " + _CRASHED, True),
     # written after the commit: the pass rolls forward
     _Leftover("files", _TOMB_SWAPPED_SENTINEL,
-              "leftover swap sentinel {name} — " + _CRASHED, True, "drop"),
-    # a pass's staged rewrite; the next pass of that op overwrites it
-    *(_Leftover("stage", suffix, "leftover staging dir {root}{name}", False,
-                "drop", "staging_removed")
-      for suffix in _STAGE_DIRS.values()),
-    # held by a live compact or rebuild, or left by a crashed one. Taking
-    # it is what refuses a second maintainer (_maintenance), and
+              "leftover swap sentinel {name} — " + _CRASHED, True),
+    # held by a live compact or rebuild, or left by a crashed one;
     # recovery presumes no live maintainer, as restoring tombstones does
     _Leftover("files", _MAINT_LOCK,
               "maintenance lock {name} held — a compact/rebuild is live, "
               "or one crashed (run ann_index_recover if no maintainer is "
-              "running)", False, "drop", "lock_cleared"),
+              "running)", True, "lock_cleared"),
     # the manifest being written: uncommitted unless it is the only copy
     _Leftover("manifest", _MANIFEST_TMP,
               "leftover manifest temp {name} — interrupted manifest write; "
-              "run ann_index_recover", False, "heal"),
+              "run ann_index_recover"),
     # the manifest being replaced: readers fall back to it meanwhile
     _Leftover("manifest", _MANIFEST_PREV,
               "leftover manifest backup {name}{serving} — crashed manifest "
-              "swap; run ann_index_recover", False, "heal"),
+              "swap; run ann_index_recover"),
 )
 
 
 class _State(NamedTuple):
-    """What an index root holds, as one :func:`_index_state` read it:
-    ``{name: Path}`` per place, in listing order."""
+    """What an index root holds, as one :func:`_index_state` read it
+    (:meth:`listed` alone fills ``dirs`` and ``files``): ``{name: Path}``
+    per place, in listing order."""
 
     root: str
     dirs: dict  # the dirs under the root
@@ -1157,18 +1168,22 @@ def write_index_manifest(spark, index_path: str, manifest: dict, *,
     # Hadoop rename can report failure by returning false, so both
     # renames are checked; on failure the swap aborts with the previous
     # manifest in place (as the backup at worst, which readers serve).
-    final, prev, tmp = (JPath(f"{target}/{n}") for n in (
-        "manifest.json", _MANIFEST_PREV, _MANIFEST_TMP))
+    final = JPath(f"{target}/manifest.json")
+    prev = JPath(f"{target}/{_MANIFEST_PREV}")
+    tmp = JPath(f"{target}/{_MANIFEST_TMP}")
     # the outgoing manifest's sidecar generation survives one more write
-    prev_rels = (_manifest_rels(_fs_read_bytes(
-        spark, f"{target}/manifest.json")) if wrote_sidecar else set())
+    prev_rels = (
+        _manifest_rels(_fs_read_bytes(spark, f"{target}/manifest.json"))
+        if wrote_sidecar and fs.exists(final) else set()
+    )
     _fs_write_bytes(
         spark, f"{target}/{_MANIFEST_TMP}", payload.encode("utf-8")
     )
     # drop stale leftovers: legacy multi-file text layouts (visible
     # part-* files) and a previous crashed swap's backup
     for st in fs.listStatus(JPath(target)):
-        if st.getPath().getName() not in ("manifest.json", _MANIFEST_TMP):
+        name = st.getPath().getName()
+        if name not in ("manifest.json", _MANIFEST_TMP):
             fs.delete(st.getPath(), True)
     if fs.exists(final) and not _rename_ok(fs, final, prev):
         fs.delete(tmp, False)  # abort: current manifest untouched
@@ -1239,9 +1254,13 @@ def _gc_sidecar_generations(spark, fs, JPath, root: str, keep: set) -> int:
     removed = 0
     for d in (_CENTROID_SIDECAR_DIR, _CODEBOOK_SIDECAR_DIR):
         dpath = JPath(f"{root}/{d}")
-        for st in fs.listStatus(dpath) if fs.exists(dpath) else ():
-            if f"{d}/{st.getPath().getName()}" not in keep:
-                removed += bool(fs.delete(st.getPath(), False))
+        if not fs.exists(dpath):
+            continue
+        for st in fs.listStatus(dpath):
+            name = st.getPath().getName()
+            if f"{d}/{name}" not in keep:
+                if fs.delete(st.getPath(), False):
+                    removed += 1
     return removed
 
 
@@ -1410,14 +1429,16 @@ def read_index_manifest(spark, index_path: str, *,
 
     for cand in _manifest_candidates(index_path, search_parents):
         # one small JSON file, read driver-side: a spark.read.text would
-        # launch a job per path-only probe, append and drift check. A
-        # reader inside write_index_manifest's rename window, or after a
-        # crash between its two renames, gets the backup, which carries
-        # the previous manifest: the swap stays invisible to probes
-        for name in ("manifest.json", _MANIFEST_PREV):
-            data = _fs_read_bytes(spark, f"{cand}/{_MANIFEST_DIR}/{name}")
-            if data:
-                return _parse(data.decode("utf-8"), cand)
+        # launch a job per path-only probe, append and drift check
+        data = _fs_read_bytes(spark, f"{cand}/{_MANIFEST_DIR}/manifest.json")
+        if data:
+            return _parse(data.decode("utf-8"), cand)
+        # a reader inside write_index_manifest's rename window, or a crash
+        # between its two renames: the backup carries the previous
+        # manifest, so the swap stays invisible to concurrent probes
+        data = _fs_read_bytes(spark, f"{cand}/{_MANIFEST_DIR}/{_MANIFEST_PREV}")
+        if data:
+            return _parse(data.decode("utf-8"), cand)
         fs, JPath = _hadoop_fs(spark, cand)
         if not fs.exists(JPath(f"{cand}/{_MANIFEST_DIR}")):
             continue  # no manifest dir here — try the next ancestor
@@ -1865,11 +1886,15 @@ def ivf_manifest(emb: DataFrame, centroids: np.ndarray, *,
     so append-only index assemblies (e.g. the streaming ingest key,
     which never one-shot-builds) can write the same self-describing
     manifest before their first append."""
-    manifest = dict(
-        kind="ivf", dim=dim,
-        n_cells=n_cells if n_cells is not None else len(centroids),
-        seed=seed, vec_col=vec_col, id_col=id_col,
-        centroids=[[float(x) for x in row] for row in centroids])
+    manifest = {
+        "kind": "ivf",
+        "dim": dim,
+        "n_cells": n_cells if n_cells is not None else len(centroids),
+        "seed": seed,
+        "vec_col": vec_col,
+        "id_col": id_col,
+        "centroids": [[float(x) for x in row] for row in centroids],
+    }
     if drift_reference:
         manifest["drift"] = ivf_drift_reference(
             emb, centroids, dim=dim, id_col=id_col, vec_col=vec_col
@@ -2343,9 +2368,8 @@ def knn_join(emb: DataFrame, query_ids: list, k: int = 5,
        :func:`dot_f64` — the sequential-fold form the oracle replicates
        bit-for-bit — via a broadcast hash join back to the Q query rows,
        then one Window ranks ``(round(cosine, 6) DESC, id)`` per query and
-       keeps k (:func:`_rescore_topk`, the batch probes' rescore). BLAS
-       only ever PRUNES; every returned number is the certified JVM
-       fold. ``overfetch`` absorbs BLAS-vs-fold ULP noise
+       keeps k. BLAS only ever PRUNES; every returned number is the
+       certified JVM fold. ``overfetch`` absorbs BLAS-vs-fold ULP noise
        and 6-dp rounding ties at the per-batch boundary (a displaced true
        top-k row must out-rank ≥ k + overfetch rows in its own batch,
        which a ≤1e-6 perturbation cannot cause).
@@ -2401,8 +2425,20 @@ def knn_join(emb: DataFrame, query_ids: list, k: int = 5,
         src.where(F.col(id_col).isin([int(q) for q in query_ids]))
         .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("__qv"))
     )
-    return _rescore_topk(cands, queries, id_col, vec_col, [id_col, label_col],
-                         k)
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc(id_col))
+    return (
+        cands.join(F.broadcast(queries), "q_id")
+        .select(
+            "q_id", id_col, label_col,
+            F.round(dot_f64(F.col(vec_col), F.col("__qv")), 6).alias("cosine"),
+        )
+        .transform(_finite)
+        .withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= k)
+        .drop("__rn")
+    )
 
 
 # --------------------------------------------- product quantization (PQ/ADC)
@@ -3110,7 +3146,7 @@ class _Pass(NamedTuple):
     manifest: dict
     fam: _Family
     epoch: int
-    state: _State  # the root, read after taking the lock
+    state: _State  # the root, listed after the marker snapshot
     markers: set  # the append markers the pass snapshotted
     old_dirs: list  # the data dirs the swap replaces
     files_in: list  # (path, bytes) of their data files
@@ -3152,10 +3188,10 @@ def _maintenance(spark, index_path: str, op: str, target_bytes: int):
             "back/forward and clear the lock)."
         )
     try:
-        state = _index_state(fs, JPath, root)
-        tombs = state.found(_TOMBSTONES)
-        sentinels = [n for art in _LEFTOVERS if art.refuses
-                     and art is not _TOMBSTONES for n in state.found(art)]
+        debris = _State.listed(fs, JPath, root)
+        tombs = debris.found(_TOMBSTONES)
+        sentinels = [n for n in (_TOMB_STAGED_SENTINEL, _TOMB_SWAPPED_SENTINEL)
+                     if n in debris.files]
         if tombs or sentinels:
             raise RuntimeError(
                 f"{caller}: leftover tombstone dirs/sentinels under {root} "
@@ -3165,6 +3201,9 @@ def _maintenance(spark, index_path: str, op: str, target_bytes: int):
             )
         _check_stale_append_markers(spark, root, epoch, caller)
         markers = set(_list_append_markers(spark, root))
+        # listed after the marker snapshot: an append writes its marker
+        # after its data, so every snapshotted marker's dir is listed
+        state = _State.listed(fs, JPath, root)
         old_dirs = state.data((f"{fam.part_col}=", "ingest_batch="))
         if not old_dirs:
             raise ValueError(f"{caller}: no data directories under {root}")
@@ -3530,19 +3569,24 @@ def ann_index_rebuild(spark, index_path: str, corpus=None, *,
 def ann_index_recover(spark, index_path: str) -> dict:
     """Heal a crashed :func:`ann_index_compact` / :func:`ann_index_rebuild`
     / manifest swap — the machine version of the instruction the
-    leftover-tombstone error prints. What it does with each artifact is
-    the ``recover`` column of ``_LEFTOVERS``.
+    leftover-tombstone error prints. What it does with each artifact of
+    ``_LEFTOVERS``, in order:
 
-    A crashed manifest swap heals first, since the committed epoch
-    decides a crashed pass's direction: the backup is renamed back when
-    ``manifest.json`` is missing and dropped otherwise; the temp is
-    dropped when a committed manifest or backup exists, renamed into
-    place when it is the only copy and parses (deleting it would leave
-    the index manifest-less), and kept and reported
-    (``manifest_tmp_kept``) when it does not. Heal renames go through
-    :func:`_rename_ok`, so a failed one deletes nothing.
+    - the manifest temp: dropped when a committed manifest or backup
+      exists, renamed into place when it is the only copy and parses
+      (deleting it would leave the index manifest-less), else kept and
+      reported (``manifest_tmp_kept``);
+    - the manifest backup: renamed back when ``manifest.json`` is
+      missing, dropped otherwise;
+    - the tombstones: renamed back (roll back) or deleted (roll
+      forward), as the sentinels decide;
+    - the two swap sentinels: read for the direction, then dropped;
+    - the stage dirs (``staging_removed``) and the lock
+      (``lock_cleared``): dropped.
 
-    Both maintainers commit by one write, the manifest at epoch + 1
+    The manifest heals first, since the committed epoch decides a
+    crashed pass's direction; heal renames go through :func:`_rename_ok`,
+    so a failed one deletes nothing. Both maintainers commit by one write, the manifest at epoch + 1
     (:func:`_rewrite_and_swap`), so the direction is the manifest's
     epoch against the pre-swap epoch the staged sentinel recorded:
 
@@ -3654,7 +3698,7 @@ def ann_index_recover(spark, index_path: str) -> dict:
                     m, int(sentinel["epoch"]) + 1))
             out["epoch_finished"] = 1
     for art in _LEFTOVERS:
-        if art.recover == "drop":
+        if art.drop:
             for name in state.found(art):
                 if fs.delete(getattr(state, art.where)[name], True) \
                         and art.counted:
@@ -3715,8 +3759,9 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
     epoch = int(manifest.get("epoch", 0))
     root = manifest.get("_root", index_path).rstrip("/")
     if kind not in _FAMILIES:
+        problems.append(f"unknown index kind {kind!r}")
         return {"ok": False, "kind": kind, "epoch": epoch,
-                "problems": [f"unknown index kind {kind!r}"], "checks": {}}
+                "problems": problems, "checks": checks}
     fam = _FAMILIES[kind]
     part_col = fam.part_col
     id_col, vec_col = _cols(manifest, ("id_col", "vec_col"))
@@ -3751,8 +3796,9 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
             f"{sorted(set(stale.values()))} < manifest epoch {epoch}) — "
             "an append overlapped a compaction; rows may be lost")
 
-    has_q = fam.int8_store and _quantized_store_exists(spark, root)
-    if not tomb_data_debris and (built or batched):
+    if not tomb_data_debris and (
+            not problems or (checks.get("n_built_dirs") or
+                             checks.get("n_batch_dirs"))):
         df = _read_index_root(spark, root, part_col, state)
         need = set(_cols(manifest, fam.required))
         missing = need - set(df.columns)
@@ -3768,16 +3814,23 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
                         f"{part_col}={mx} outside the model range "
                         f"[0, {n_parts})")
             sample = df.limit(1).collect()
-            sized = [("vector", vec_col, "dim")]
-            if fam.codes:
-                sized.append((fam.codes[0], *fam.codes[:2]))
-            for label, col, key in (sized if sample and vec_col in need
-                                    else ()):
-                want, got = manifest.get(key), sample[0][col]
-                if want is not None and got is not None \
-                        and len(got) != int(want):
-                    problems.append(f"sampled {label} length {len(got)} != "
-                                    f"manifest {key} {want}")
+            if sample and vec_col in need:
+                dim = manifest.get("dim")
+                vec = sample[0][vec_col]
+                if dim is not None and vec is not None \
+                        and len(vec) != int(dim):
+                    problems.append(
+                        f"sampled vector length {len(vec)} != manifest "
+                        f"dim {dim}")
+                if fam.codes:
+                    code_col, len_key, _ = fam.codes
+                    n_codes = manifest.get(len_key)
+                    code = sample[0][code_col]
+                    if n_codes is not None and code is not None \
+                            and len(code) != int(n_codes):
+                        problems.append(
+                            f"sampled {code_col} length {len(code)} != "
+                            f"manifest {len_key} {n_codes}")
             if deep:
                 checks["n_rows"] = df.count()
                 dups = checks["n_rows"] - df.select(
@@ -3807,7 +3860,7 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
                 # why they are benign
                 if fam.dup_note and dups:
                     checks["note"] = fam.dup_note
-                if has_q:
+                if fam.int8_store and _quantized_store_exists(spark, root):
                     # postings/store id consistency: an id in the
                     # postings but absent from the INT8 store is
                     # silently DROPPED by the screen's semi-join — a
@@ -3830,13 +3883,15 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
                             "rebuild to restore store consistency")
 
     if fam.int8_store:
+        has_q = _quantized_store_exists(spark, root)
         checks["quantized_store"] = has_q
         if bool(manifest.get("quantized", False)) != has_q:
             problems.append(
                 f"manifest quantized={manifest.get('quantized')} but INT8 "
                 f"store {'present' if has_q else 'MISSING'}")
     for payload, (pointer, loader) in _SIDECAR_KEYS.items():
-        rel = dict.get(manifest, pointer)
+        rel = dict.get(manifest, pointer) if isinstance(manifest, dict) \
+            else None
         if rel:
             try:
                 loader(spark, root, rel)

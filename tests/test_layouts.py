@@ -4017,6 +4017,60 @@ def test_crash_artifact_verify_compact_recover(spark, tmp_path,
     assert not any(n.startswith("idx__") for n in os.listdir(tmp_path))
 
 
+@pytest.mark.parametrize("op", ["compact", "rebuild"])
+def test_append_landing_at_the_marker_snapshot_is_folded(
+        spark, tmp_path, monkeypatch, healthy_ivf_index, op):
+    """An append completes (data, then marker) just before the pass
+    snapshots the append markers. Its marker joins the snapshot, so the
+    pass consumes it; the pass must then also rewrite its data dir
+    (or abort), never leave it beside the new layout unmarked."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from dask_hivemetastore_spark.catalog import load_table
+    from dask_hivemetastore_spark.operators import similarity
+    from dask_hivemetastore_spark.operators.similarity import (
+        ann_index_compact,
+        ann_index_rebuild,
+        ann_index_verify,
+        ivf_append,
+    )
+    from .conftest import SF_SMOKE
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    idx = str(tmp_path / "idx")
+    shutil.copytree(healthy_ivf_index, idx)
+    n_rows = spark.read.parquet(idx).count()
+    batch = emb.where(F.col("vec_id") % 5 == 0)
+    n_batch = batch.count()
+
+    # a pass's _list_append_markers calls are (1) the stale-marker
+    # pre-flight, (2) the snapshot, then the pre- and post-swap re-lists
+    real = similarity._list_append_markers
+    calls = {"n": 0, "appending": False}
+
+    def appending(spark_, root):
+        if not calls["appending"]:
+            calls["n"] += 1
+            if calls["n"] == 2:
+                calls["appending"] = True  # the append lists markers too
+                ivf_append(batch, f"{idx}/ingest_batch=7", mode="overwrite")
+                calls["appending"] = False
+        return real(spark_, root)
+
+    monkeypatch.setattr(similarity, "_list_append_markers", appending)
+    maintain = ann_index_compact if op == "compact" else ann_index_rebuild
+    stats = maintain(spark, idx)
+    monkeypatch.setattr(similarity, "_list_append_markers", real)
+
+    assert stats["n_batch_dirs_folded"] == 1
+    assert not any(n.startswith("ingest_batch=") for n in os.listdir(idx))
+    assert not os.listdir(f"{idx}/{similarity._APPEND_LOG_DIR}")
+    assert spark.read.parquet(idx).count() == n_rows + n_batch
+    assert ann_index_verify(spark, idx)["ok"]
+
+
 def test_residual_codebooks_follow_the_coarse_quantizer(spark, tmp_path):
     """Residual IVF-PQ codebooks train on residuals against the build's
     own centroids, so a residual build must not reuse books another
